@@ -119,7 +119,6 @@ def flagship_pip(spark, n_points: int, df=None) -> int:
         subs.select(F.col("name").alias("poly_id"), "geometry"),
         multipolygon=True,
         broadcast=True,
-        refine="native",
     )
     return assigned.count()
 
@@ -216,7 +215,7 @@ def run_single_job(job: str, cores: int, n: int) -> None:
         df = assign_points_to_polygons(
             points_table(spark, n).withColumnRenamed("point_id", "image_id"),
             subs.select(F.col("name").alias("poly_id"), "geometry"),
-            multipolygon=True, broadcast=True, refine="native",
+            multipolygon=True, broadcast=True,
         )
     elif job == "decode":
         # Arrow-kernel tier: distributed image generation + decode/phash
@@ -759,7 +758,7 @@ def main() -> None:
         n = assign_points_to_polygons(
             located.select("image_id", "lon", "lat"),
             subs.select(F.col("name").alias("poly_id"), "geometry"),
-            multipolygon=True, broadcast=True, refine="native",
+            multipolygon=True, broadcast=True,
         ).count()
         extras["image_assign_500k_assigned"] = n
         return n
@@ -773,9 +772,9 @@ def main() -> None:
         # (id, hash) rows straight from the bases arrays and the per-hash
         # doc count runs as a window count — deleting the 59M-row
         # localCheckpoint, the explode, the distinct exchange and the
-        # count join (kernel='native' keeps the all-JVM form; identical
-        # values, equivalence-tested). sample_mod=8 (deterministic hash
-        # sample, unbiased estimator) remains the further lever.
+        # count join (identical values; the all-JVM form is the test
+        # reference). sample_mod=8 (deterministic hash sample, unbiased
+        # estimator) remains the further lever.
         from building2osm_spark.operators import dedupe as DDop
         from building2osm_spark.sources.fixtures import distributed_documents
 

@@ -1670,7 +1670,7 @@ FROM orders GROUP BY o_orderpriority
 
 def _dedup_shingle_ctes(tail: str) -> str:
     """Shared CTE chain: docs ∪ planted dups → words → 3-shingles → base
-    hash → 64-slot MinHash signatures (mirrors dedupe.word_shingles +
+    hash → 64-slot MinHash signatures (mirrors dedupe._doc_hashes +
     minhash_signatures with the default md5 base)."""
     a, b = DD._hash_params(64, 42)
     m = DD._MERSENNE

@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from ..constants import EARTH_RADIUS, EARTH_RADIUS_OFFSET
 
+# cell-id layout, the Column-side twin of cells.py: res<<54 | ix<<27 | iy
 _RES_SHIFT = 54
 _IX_SHIFT = 27
+_COORD_MASK = (1 << _IX_SHIFT) - 1
 
 
 def map_update(base: Column, overrides: Column) -> Column:
@@ -41,18 +43,60 @@ def map_update_fixed(base: Column, overrides: Column, keys: tuple) -> Column:
     return F.map_concat(F.map_filter(base, lambda k, _: ~k.isin(*keys)), overrides)
 
 
+def grid_xy_col(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
+    """(ix, iy) grid indices of (lon, lat) at resolution `res`, clamped to
+    the 2^res × 2^res grid — the index half of cells.cell_id."""
+    n = F.lit(1 << res).cast("long")
+    ix = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), F.lit(0)), n - 1)
+    iy = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n), F.lit(0)), n - 1)
+    return ix, iy
+
+
+def cell_pack(res, ix: Column, iy: Column) -> Column:
+    """Cell id res<<54 | ix<<27 | iy — the one Column-side packing of the
+    cell-id layout (numpy twin: cells.py). `res` is an int or a Column."""
+    r = F.lit(res) if isinstance(res, int) else res
+    return (
+        F.shiftleft(r.cast("long"), _RES_SHIFT)
+        .bitwiseOR(F.shiftleft(ix.cast("long"), _IX_SHIFT))
+        .bitwiseOR(iy.cast("long"))
+    )
+
+
+def cell_res(cell: Column) -> Column:
+    """Resolution of a packed cell id (Column twin of cells.cell_res)."""
+    return F.shiftrightunsigned(cell, _RES_SHIFT)
+
+
+def cell_ixy(cell: Column) -> tuple[Column, Column]:
+    """(ix, iy) of a packed cell id (Column twin of cells.cell_ixy)."""
+    mask = F.lit(_COORD_MASK)
+    return F.shiftrightunsigned(cell, _IX_SHIFT).bitwiseAND(mask), cell.bitwiseAND(mask)
+
+
+def cell_parent(cell: Column, parent_res=None) -> Column:
+    """Ancestor cell at `parent_res` (default: one level up) — the Column
+    twin of cells.cell_parent. `parent_res` is an int or a Column."""
+    res = cell_res(cell)
+    if parent_res is None:
+        pres, shift = res - F.lit(1), F.lit(1)
+    else:
+        pres = F.lit(parent_res) if isinstance(parent_res, int) else parent_res
+        shift = (res - pres).cast("int")
+    ix, iy = cell_ixy(cell)
+    # the Python shiftrightunsigned wrapper takes an int shift only
+    return cell_pack(
+        pres,
+        F.call_function("shiftrightunsigned", ix, shift),
+        F.call_function("shiftrightunsigned", iy, shift),
+    )
+
+
 def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
     """int64 cell id at resolution `res` — same scheme as cells.cell_id,
     expressed as pure Catalyst arithmetic so point-side cell assignment
     never leaves the JVM."""
-    n = F.lit(1 << res).cast("long")
-    ix = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), F.lit(0)), n - 1)
-    iy = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n), F.lit(0)), n - 1)
-    return (
-        F.shiftleft(F.lit(res).cast("long"), _RES_SHIFT)
-        .bitwiseOR(F.shiftleft(ix.cast("long"), _IX_SHIFT))
-        .bitwiseOR(iy.cast("long"))
-    )
+    return cell_pack(res, *grid_xy_col(lon, lat, res))
 
 
 def distance_m_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:

@@ -9,8 +9,6 @@ Python anywhere.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -135,23 +133,28 @@ def url_domain(url: Column) -> Column:
 _FP_MOD = (1 << 31) - 1  # Mersenne-31: products stay < 2^62 (ANSI-safe)
 
 
+def _base60(col) -> Column:
+    """First 60 bits of md5 as a non-negative long — the engine's one
+    cross-engine canonical string hash (identical in DuckDB via
+    CAST('0x'||substring(md5(x),1,15) AS UBIGINT)). Shared by the dedup
+    shingle hashes, the sampling keys and doc_fingerprint."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def doc_fingerprint(text: Column) -> Column:
     """Order-sensitive 62-bit document fingerprint: two polynomial rolling
     hashes over the word sequence (multipliers 31 and 131) in Mersenne-31
     space, packed into one int64. Native aggregate — no overflow under
-    Spark's ANSI arithmetic. The word hash is the md5-60bit base (see
-    operators.dedupe._base60), so the fingerprint is bit-reproducible in
-    DuckDB SQL (list_reduce over pre-hashed words) — driver ORACLE_QUALITY."""
+    Spark's ANSI arithmetic. The word hash is the md5-60bit base
+    (_base60), so the fingerprint is bit-reproducible in DuckDB SQL
+    (list_reduce over pre-hashed words) — driver ORACLE_QUALITY."""
     words = F.split(F.lower(F.trim(text)), r"\s+")
-    word_hash = lambda w: (  # noqa: E731
-        F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long") % _FP_MOD
-    )
 
     def rolling(mult: int) -> Column:
         return F.aggregate(
             words,
             F.lit(0).cast("long"),
-            lambda acc, w: (acc * F.lit(mult) + word_hash(w)) % _FP_MOD,
+            lambda acc, w: (acc * F.lit(mult) + _base60(w) % _FP_MOD) % _FP_MOD,
         )
 
     return F.shiftleft(rolling(31), 31).bitwiseOR(rolling(131))
@@ -188,10 +191,16 @@ _NFC_UDF = None
 def _get_nfc_udf():
     """Created lazily (a pandas_udf with a DDL return type needs an
     active session) and cached per process."""
-    global _NFC_UDF
+    global _NFC_UDF, pd
     if _NFC_UDF is not None:
         return _NFC_UDF
     import unicodedata
+
+    # a module global, imported on first use: the type hints below resolve
+    # against the module namespace, and the Python workers that unpickle
+    # the dedup kernels import this module for _base60 without needing
+    # pandas (~0.35 s per worker)
+    import pandas as pd
 
     @F.pandas_udf("string")
     def nfc_udf(s: pd.Series) -> pd.Series:

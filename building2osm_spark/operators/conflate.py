@@ -44,7 +44,9 @@ from ..constants import (
 )
 from ..functions.columns import (
     cell_id_col,
+    cell_pack,
     coordinate_offset_cols,
+    grid_xy_col,
     map_update,
     map_update_fixed,
 )
@@ -56,8 +58,11 @@ CONFLATE_RES = 17
 
 # Safety factor on the fringe threshold of _fringe_cells: covers the
 # cos(o_lat) vs cos(i_lat) difference in the forward bbox's longitude
-# shrink (|Δlat| ≤ 2·margin_deg ≈ 3.2e-6 rad, so the true ratio is
-# ≤ 1.0001 anywhere cos(lat) ≥ 0.01) plus edge-coordinate float error.
+# shrink plus edge-coordinate float error. With |Δlat| ≤ 2·margin_deg ≈
+# 3.2e-6 rad the ratio is ≤ 1 + tan(lat)·|Δlat|, which stays under the
+# 1.001 slack only for |lat| ≲ 89.8°; nearer the poles a pair in an
+# adjacent longitude cell can be dropped that _neighbors9 would keep
+# (the 3×3 premise itself breaks well before that).
 _FRINGE_SLACK = 1.001
 
 
@@ -81,8 +86,7 @@ def _fringe_cells(lon, lat, res: int, margin_m: float):
     _neighbors9). Differentially tested against _neighbors9 on random +
     border-adversarial corpora (test_conflate_fringe.py)."""
     n = F.lit(1 << res).cast("long")
-    ix = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), F.lit(0)), n - 1)
-    iy = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n), F.lit(0)), n - 1)
+    ix, iy = grid_xy_col(lon, lat, res)
     cell_w = F.lit(360.0) / n
     cell_h = F.lit(180.0) / n
     d_deg = F.lit(
@@ -100,11 +104,7 @@ def _fringe_cells(lon, lat, res: int, margin_m: float):
     def cell(jx, jy):
         cx = F.least(F.greatest(jx, F.lit(0)), n - 1)
         cy = F.least(F.greatest(jy, F.lit(0)), n - 1)
-        return (
-            F.shiftleft(F.lit(res).cast("long"), 54)
-            .bitwiseOR(F.shiftleft(cx.cast("long"), 27))
-            .bitwiseOR(cy.cast("long"))
-        )
+        return cell_pack(res, cx, cy)
 
     guarded = [
         F.when(near_w, cell(ix - 1, iy)),

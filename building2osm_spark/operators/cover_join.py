@@ -11,29 +11,23 @@ driving the ray cast at :204-243) with a cell-indexed join:
      for subdivision-scale polygon sides) the cover is broadcast — the
      points table is NEVER shuffled, which is what makes this run at
      10^12-point scale: the big side streams map-only;
-  4. exact refinement: vectorized ray-cast PIP (geom.points_in_polygon) in
-     mapInPandas, with polygon geometries shipped once per executor via a
-     Spark broadcast variable — geometry never rides the candidate rows.
+  4. exact refinement: the ray cast as Catalyst higher-order expressions
+     on the candidate rows (rings_contains_col) — polygon rings ride the
+     tiny broadcast side, interior cells skip the test entirely.
 
 Big-polygon-side variant (`broadcast=False`): covers are shuffled on cell
-and the refinement geometry travels via an equi-join instead of a broadcast
-dict; AQE skew-join plus the adaptive hot-cell explosion in
+and the refinement rings travel via an equi-join instead of the broadcast;
+AQE skew-join plus the adaptive hot-cell explosion in
 operators/partitioning.py keep cell skew bounded.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from pyspark.sql import Column
-
-from .. import geom as G
 from ..constants import DEFAULT_CELL_RES
-from ..functions.columns import cell_id_col
+from ..functions.columns import cell_id_col, cell_parent, cell_res
 from ..functions.udfs import make_cover_udf, make_multipolygon_cover_udf, _polygon
 
 
@@ -203,9 +197,7 @@ def _cover_levels(cov: DataFrame) -> list[int]:
     the slim (id, cell) table (≤19 possible values)."""
     return sorted(
         r[0]
-        for r in cov.select(
-            F.shiftrightunsigned("cell", 54).cast("int").alias("r")
-        )
+        for r in cov.select(cell_res(F.col("cell")).cast("int").alias("r"))
         .distinct()
         .collect()
     )
@@ -218,18 +210,12 @@ def _drop_shadowed_cells(
     that have a same-feature ancestor also in the cover (the ancestor
     spatially contains them — keeping both would double-match any point in
     the fine cell). Slim self-join on (poly_id, cell) only."""
-    m = (1 << 27) - 1
-    lvls = ",".join(str(x) for x in levels[:-1])
-    anc_expr = (
-        f"transform(filter(array({lvls}), L -> L < shiftright(cell, 54)),"
-        f" L -> shiftleft(CAST(L AS BIGINT), 54)"
-        f" | shiftleft(shiftright(shiftright(cell, 27) & {m},"
-        f"   CAST(shiftright(cell, 54) - L AS INT)), 27)"
-        f" | shiftright(cell & {m}, CAST(shiftright(cell, 54) - L AS INT)))"
+    cell = F.col("cell")
+    anc_expr = F.transform(
+        F.filter(F.array(*[F.lit(x) for x in levels[:-1]]), lambda L: L < cell_res(cell)),
+        lambda L: cell_parent(cell, L),
     )
-    anc = cov.select(
-        poly_id, "cell", F.explode(F.expr(anc_expr)).alias("__anc")
-    )
+    anc = cov.select(poly_id, "cell", F.explode(anc_expr).alias("__anc"))
     shadowed = (
         anc.join(
             cov.select(poly_id, F.col("cell").alias("__anc")),
@@ -253,7 +239,6 @@ def assign_points_to_polygons(
     res: int = DEFAULT_CELL_RES,
     multipolygon: bool = False,
     broadcast: bool = True,
-    refine: str = "native",
     keep_unassigned: bool = False,
     compact_levels: int = 0,
 ) -> DataFrame:
@@ -264,17 +249,13 @@ def assign_points_to_polygons(
     keeps non-contained points with NULL poly_id (the 'leftover' anti-join
     of municipality_split.py:752-762 becomes a simple filter).
 
-    refine='native' (default): the exact ray cast runs as Catalyst
-    higher-order expressions on the candidate rows — the whole assignment
-    is one codegen'd JVM stage with ZERO Python serde (measured ~4-8×
-    faster than the Arrow path, and it scales with cores; the Arrow
-    round-trip itself caps at a few M rows/s per session regardless of
-    parallelism). refine='arrow': the numpy-kernel mapInPandas path —
-    same results (cross-checked in tests), useful when polygon vertex
-    counts are huge enough that per-row HOF evaluation loses to batched
-    numpy.
+    The exact ray cast runs as Catalyst higher-order expressions on the
+    candidate rows — the whole assignment is one codegen'd JVM stage with
+    ZERO Python serde (measured ~4-8× faster than a numpy mapInPandas
+    refine, and it scales with cores; the Arrow round-trip itself caps at
+    a few M rows/s per session regardless of parallelism).
 
-    compact_levels > 0 (native refine only) compacts the cell cover — the
+    compact_levels > 0 compacts the cell cover — the
     north star's H3-`compact` analog: complete sibling quartets merge into
     their parent up to `compact_levels` resolutions up (full iff all 4
     children full), shrinking the broadcast side ~4× per merged level;
@@ -286,10 +267,6 @@ def assign_points_to_polygons(
     meets exactly one candidate row per polygon.
     """
     spark = points.sparkSession
-    if refine not in ("native", "arrow"):
-        raise ValueError(f"unknown refine mode {refine!r} (want 'native' or 'arrow')")
-    if compact_levels and refine != "native":
-        raise ValueError("compact_levels requires refine='native'")
     covers = polygon_covers(polys, poly_id, geometry, res, multipolygon)
 
     pts = points.withColumn("__cell", cell_id_col(F.col(lon), F.col(lat), res))
@@ -308,242 +285,142 @@ def assign_points_to_polygons(
             ),
         )
 
-    def arrow_cover_probe() -> tuple[DataFrame, DataFrame]:
-        """Mixed-resolution handling for the arrow paths, same as the
-        native shuffled path: the cover can be res-lowered even
-        uncompacted (cover_polygon's max_cells lowering for huge
-        polygons — exactly the case 'arrow' is recommended for), so the
-        point side must probe the resolutions ACTUALLY present; a
-        single-res probe silently loses every point of a res-lowered
-        polygon. Ancestor-shadowed cells are dropped when resolutions
-        mix: the arrow verify has no __full short-circuit, so a point in
-        the overlap would emit the same (point, polygon) row twice."""
+    if broadcast:
+        # polygon side is small by assumption: compute covers AND the
+        # flattened ring structs driver-side, so the runtime plan
+        # contains NO Python at all (plan-asserted in tests)
+        from .. import cells as C
+
+        side_rows = []
+        for r in polys.select(poly_id, geometry).collect():
+            g = r[geometry]
+            polys_list = g if multipolygon else [g]
+            cell_full: dict[int, bool] = {}
+            rings_flat = []
+            for pi, p in enumerate(polys_list):
+                cc, full = C.cover_polygon_flags(_polygon(p), res)
+                for cell, f in zip(cc.tolist(), full.tolist()):
+                    cell_full[cell] = bool(cell_full.get(cell, False) or f)
+                for ri, ring in enumerate(p):
+                    rings_flat.append(
+                        (
+                            ri != 0,
+                            pi,
+                            [float(pt[0]) for pt in ring],
+                            [float(pt[1]) for pt in ring],
+                        )
+                    )
+            # a multipolygon feature whose sub-polygon covers came out
+            # at different effective resolutions (max_cells lowering)
+            # can hold overlapping cells — keep only the ancestor so a
+            # point never matches the same feature twice
+            cell_full = C.dedup_ancestor_overlap(cell_full)
+            # compact AFTER merging sub-polygon covers: per-sub-polygon
+            # compaction could leave the same feature with spatially
+            # overlapping cells at different resolutions (coarse merged
+            # cell from one sub-polygon over a fine cell of another) —
+            # a point in the overlap would match twice and duplicate
+            if compact_levels:
+                cell_full = C.compact_flags(cell_full, compact_levels)
+            for cell, f in cell_full.items():
+                # interior cells carry NO rings: the candidate join row
+                # proves containment by itself (polyfill interior cell)
+                side_rows.append((int(cell), r[poly_id], f, [] if f else rings_flat))
+        # ship the side table as ONE Arrow table: the classic
+        # createDataFrame(list) route is RDD-pickle-backed — every
+        # task of every broadcast build spins a Python worker to
+        # unpickle its slice (measured ~6 task-s of near-zero-JVM-cpu
+        # wait per flagship run, ~0.2 s of its 1.4 s wall). The Arrow
+        # path deserializes JVM-side; no Python in the runtime plan.
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        rings_pa_t = pa.list_(
+            pa.struct(
+                [
+                    ("hole", pa.bool_()),
+                    ("poly", pa.int32()),
+                    ("xs", pa.list_(pa.float64())),
+                    ("ys", pa.list_(pa.float64())),
+                ]
+            )
+        )
+        side = spark.createDataFrame(
+            pa.table(
+                {
+                    "__cell": pa.array(
+                        [c for c, _i, _f, _r in side_rows], pa.int64()
+                    ),
+                    poly_id: pa.array(
+                        [i for _c, i, _f, _r in side_rows],
+                        to_arrow_type(polys.schema[poly_id].dataType),
+                    ),
+                    "__full": pa.array(
+                        [f for _c, _i, f, _r in side_rows], pa.bool_()
+                    ),
+                    "__rings": pa.array(
+                        [
+                            [
+                                {"hole": h, "poly": pi, "xs": xs, "ys": ys}
+                                for (h, pi, xs, ys) in r
+                            ]
+                            for _c, _i, _f, r in side_rows
+                        ],
+                        rings_pa_t,
+                    ),
+                }
+            )
+        )
+        # probe every resolution actually present: compaction (and
+        # cover_polygon's max_cells res-lowering for huge polygons)
+        # yields mixed-res covers; a single-res probe would silently
+        # miss every cover cell at another resolution
+        levels = sorted(set(C.cell_res([c for c, *_ in side_rows]).tolist())) or [res]
+        pts = multi_res_probe(levels)
+    else:
+        # the cover can be mixed-resolution even before compaction
+        # (cover_polygon's max_cells res-lowering for huge polygons):
+        # probe the resolutions ACTUALLY present — a single-res probe
+        # silently loses every point of a res-lowered polygon — and
+        # drop cells shadowed by a same-feature ancestor (multipolygon
+        # sub-covers at different resolutions can overlap, duplicating
+        # matches). The cover is slim polygon-side metadata; the
+        # localCheckpoint keeps the pandas-UDF cover computation from
+        # re-running for the levels probe and the join.
         cov = covers.localCheckpoint(eager=False)
         levels = _cover_levels(cov)
         if len(levels) > 1:
-            cov = _drop_shadowed_cells(cov, poly_id, levels).localCheckpoint(
-                eager=False
-            )
-        return cov, multi_res_probe(levels or [res])
+            # dedup BEFORE compaction: a coarse ancestor alongside a
+            # complete fine quartet would otherwise be duplicated by
+            # the quartet's promotion
+            cov = _drop_shadowed_cells(cov, poly_id, levels)
+        if compact_levels:
+            # distributed compaction (partitioning.compact_cover): the
+            # cover table shrinks ~4× per fully-merged level before the
+            # ring payload join
+            from .partitioning import compact_cover
 
-    if refine == "native":
-        if broadcast:
-            # polygon side is small by assumption: compute covers AND the
-            # flattened ring structs driver-side, so the runtime plan
-            # contains NO Python at all (plan-asserted in tests)
-            from .. import cells as C
-
-            side_rows = []
-            for r in polys.select(poly_id, geometry).collect():
-                g = r[geometry]
-                polys_list = g if multipolygon else [g]
-                cell_full: dict[int, bool] = {}
-                rings_flat = []
-                for pi, p in enumerate(polys_list):
-                    cc, full = C.cover_polygon_flags(_polygon(p), res)
-                    for cell, f in zip(cc.tolist(), full.tolist()):
-                        cell_full[cell] = bool(cell_full.get(cell, False) or f)
-                    for ri, ring in enumerate(p):
-                        rings_flat.append(
-                            (
-                                ri != 0,
-                                pi,
-                                [float(pt[0]) for pt in ring],
-                                [float(pt[1]) for pt in ring],
-                            )
-                        )
-                # a multipolygon feature whose sub-polygon covers came out
-                # at different effective resolutions (max_cells lowering)
-                # can hold overlapping cells — keep only the ancestor so a
-                # point never matches the same feature twice
-                cell_full = C.dedup_ancestor_overlap(cell_full)
-                # compact AFTER merging sub-polygon covers: per-sub-polygon
-                # compaction could leave the same feature with spatially
-                # overlapping cells at different resolutions (coarse merged
-                # cell from one sub-polygon over a fine cell of another) —
-                # a point in the overlap would match twice and duplicate
-                if compact_levels:
-                    cell_full = C.compact_flags(cell_full, compact_levels)
-                for cell, f in cell_full.items():
-                    # interior cells carry NO rings: the candidate join row
-                    # proves containment by itself (polyfill interior cell)
-                    side_rows.append((int(cell), r[poly_id], f, [] if f else rings_flat))
-            # ship the side table as ONE Arrow table: the classic
-            # createDataFrame(list) route is RDD-pickle-backed — every
-            # task of every broadcast build spins a Python worker to
-            # unpickle its slice (measured ~6 task-s of near-zero-JVM-cpu
-            # wait per flagship run, ~0.2 s of its 1.4 s wall). The Arrow
-            # path deserializes JVM-side; no Python in the runtime plan.
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_type
-
-            rings_pa_t = pa.list_(
-                pa.struct(
-                    [
-                        ("hole", pa.bool_()),
-                        ("poly", pa.int32()),
-                        ("xs", pa.list_(pa.float64())),
-                        ("ys", pa.list_(pa.float64())),
-                    ]
-                )
+            cov = compact_cover(
+                cov, cell_col="cell", group=(poly_id,), levels=compact_levels
             )
-            side = spark.createDataFrame(
-                pa.table(
-                    {
-                        "__cell": pa.array(
-                            [c for c, _i, _f, _r in side_rows], pa.int64()
-                        ),
-                        poly_id: pa.array(
-                            [i for _c, i, _f, _r in side_rows],
-                            to_arrow_type(polys.schema[poly_id].dataType),
-                        ),
-                        "__full": pa.array(
-                            [f for _c, _i, f, _r in side_rows], pa.bool_()
-                        ),
-                        "__rings": pa.array(
-                            [
-                                [
-                                    {"hole": h, "poly": pi, "xs": xs, "ys": ys}
-                                    for (h, pi, xs, ys) in r
-                                ]
-                                for _c, _i, _f, r in side_rows
-                            ],
-                            rings_pa_t,
-                        ),
-                    }
-                )
-            )
-            # probe every resolution actually present: compaction (and
-            # cover_polygon's max_cells res-lowering for huge polygons)
-            # yields mixed-res covers; a single-res probe would silently
-            # miss every cover cell at another resolution
-            levels = sorted({int(c) >> 54 for (c, *_rest) in side_rows}) or [res]
-            pts = multi_res_probe(levels)
-        else:
-            # the cover can be mixed-resolution even before compaction
-            # (cover_polygon's max_cells res-lowering for huge polygons):
-            # probe the resolutions ACTUALLY present — a single-res probe
-            # silently loses every point of a res-lowered polygon — and
-            # drop cells shadowed by a same-feature ancestor (multipolygon
-            # sub-covers at different resolutions can overlap, duplicating
-            # matches). The cover is slim polygon-side metadata; the
-            # localCheckpoint keeps the pandas-UDF cover computation from
-            # re-running for the levels probe and the join.
-            cov = covers.localCheckpoint(eager=False)
+        if len(levels) > 1 or compact_levels:
+            cov = cov.localCheckpoint(eager=False)
             levels = _cover_levels(cov)
-            if len(levels) > 1:
-                # dedup BEFORE compaction: a coarse ancestor alongside a
-                # complete fine quartet would otherwise be duplicated by
-                # the quartet's promotion
-                cov = _drop_shadowed_cells(cov, poly_id, levels)
-            if compact_levels:
-                # distributed compaction (partitioning.compact_cover): the
-                # cover table shrinks ~4× per fully-merged level before the
-                # ring payload join
-                from .partitioning import compact_cover
-
-                cov = compact_cover(
-                    cov, cell_col="cell", group=(poly_id,), levels=compact_levels
-                )
-            if len(levels) > 1 or compact_levels:
-                cov = cov.localCheckpoint(eager=False)
-                levels = _cover_levels(cov)
-            pts = multi_res_probe(levels or [res])
-            side = (
-                cov.join(polys.select(poly_id, geometry), poly_id)
-                .withColumn(
-                    "__rings", flatten_geometry_col(F.col(geometry), multipolygon)
-                )
-                .withColumn("__full", F.lit(False))
-                .drop(geometry)
-                .withColumnRenamed("cell", "__cell")
+        pts = multi_res_probe(levels or [res])
+        side = (
+            cov.join(polys.select(poly_id, geometry), poly_id)
+            .withColumn(
+                "__rings", flatten_geometry_col(F.col(geometry), multipolygon)
             )
-        joined = pts.join(F.broadcast(side) if broadcast else side, "__cell")
-        assigned = joined.filter(
-            F.col("__full")
-            | rings_contains_col(F.col("__rings"), F.col(lon), F.col(lat))
-        ).drop("__cell", "__rings", "__full")
-    elif broadcast:
-        cov, probe = arrow_cover_probe()
-        cand = probe.join(
-            F.broadcast(cov.withColumnRenamed("cell", "__cell")), "__cell"
+            .withColumn("__full", F.lit(False))
+            .drop(geometry)
+            .withColumnRenamed("cell", "__cell")
         )
-        # ship geometries once per executor, not once per row
-        geoms = {
-            r[poly_id]: r[geometry]
-            for r in polys.select(poly_id, geometry).collect()
-        }
-        bc = spark.sparkContext.broadcast(geoms)
-
-        out_schema = T.StructType(
-            [f for f in cand.schema.fields if f.name != "__cell"]
-        )
-
-        def refine(batches):
-            lookup = bc.value
-            cache: dict = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                pts_xy = np.stack(
-                    [pdf[lon].to_numpy(np.float64), pdf[lat].to_numpy(np.float64)],
-                    axis=1,
-                )
-                for pid, idx in pdf.groupby(poly_id, sort=False).indices.items():
-                    geom_raw = lookup[pid]
-                    if pid not in cache:
-                        if multipolygon:
-                            cache[pid] = [_polygon(p) for p in geom_raw]
-                        else:
-                            cache[pid] = _polygon(geom_raw)
-                    g = cache[pid]
-                    sub = pts_xy[idx]
-                    inside = (
-                        G.points_in_multipolygon(sub, g)
-                        if multipolygon
-                        else G.points_in_polygon(sub, g)
-                    )
-                    keep[idx] = inside
-                yield pdf.loc[keep].drop(columns=["__cell"])
-
-        assigned = cand.mapInPandas(refine, schema=out_schema)
-    else:
-        # big polygon side: geometry travels through a cell-partitioned join
-        cov, probe = arrow_cover_probe()
-        cand = probe.join(cov.withColumnRenamed("cell", "__cell"), "__cell")
-        with_geom = cand.join(polys.select(poly_id, geometry), poly_id)
-
-        out_fields = [
-            f for f in with_geom.schema.fields if f.name not in ("__cell", geometry)
-        ]
-        out_schema = T.StructType(out_fields)
-
-        def refine_shuffled(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                pts_xy = np.stack(
-                    [pdf[lon].to_numpy(np.float64), pdf[lat].to_numpy(np.float64)],
-                    axis=1,
-                )
-                for pid, idx in pdf.groupby(poly_id, sort=False).indices.items():
-                    geom_raw = pdf[geometry].iloc[idx[0]]
-                    g = (
-                        [_polygon(p) for p in geom_raw]
-                        if multipolygon
-                        else _polygon(geom_raw)
-                    )
-                    inside = (
-                        G.points_in_multipolygon(pts_xy[idx], g)
-                        if multipolygon
-                        else G.points_in_polygon(pts_xy[idx], g)
-                    )
-                    keep[idx] = inside
-                yield pdf.loc[keep].drop(columns=["__cell", geometry])
-
-        assigned = with_geom.mapInPandas(refine_shuffled, schema=out_schema)
+    joined = pts.join(F.broadcast(side) if broadcast else side, "__cell")
+    assigned = joined.filter(
+        F.col("__full")
+        | rings_contains_col(F.col("__rings"), F.col(lon), F.col(lat))
+    ).drop("__cell", "__rings", "__full")
 
     if keep_unassigned:
         # read twice (result + leftover anti-join): materialize into

@@ -10,9 +10,9 @@ Scale notes:
     computed JVM-side (md5/xxhash64), so the shuffle carries 16 bytes per
     row, not the document text;
   * MinHash: signatures via per-shingle 64-way universal hashing folded
-    with element-wise min aggregations — all native Catalyst (64 min()
-    exprs over array slots), no UDF; LSH banding turns the O(n²) pair
-    space into per-bucket candidate joins;
+    with element-wise mins in one map-only Arrow kernel (numpy reduceat
+    over the batch); LSH banding turns the O(n²) pair space into
+    per-bucket candidate joins;
   * SimHash: fully native bit votes — explode words → base hash → 64
     conditional-sum aggregates → bit pack (zero Python), then exact
     hamming-ball pairing within LSH-style chunks (pigeonhole: two 64-bit
@@ -21,8 +21,13 @@ Scale notes:
     deduplicated BEFORE payloads (signatures / embedding vectors) are
     re-joined, so the distinct shuffle moves 16-byte keys, not vectors.
 
+Shingle front end: every shingle-hash operator reads one word binding
+(_words: split(lower(text)) projected once) through _doc_hashes, and the
+ones with a Python kernel cross the Arrow boundary in one reader
+(_doc_kernel).
+
 Cross-engine verifiability: the canonical word/shingle base hash is the
-first 60 bits of md5 (`_base60`) — computable bit-identically in Spark
+first 60 bits of md5 (`functions.text._base60`) — computable bit-identically in Spark
 (conv(substring(md5(x),1,15),16,10)) and ANSI SQL engines like DuckDB
 (CAST('0x'||substring(md5(x),1,15) AS UBIGINT)), so every hash-derived
 result here has an exact independent SQL oracle. xxhash64 is available
@@ -32,9 +37,13 @@ as the faster JVM-only alternative (`base_hash='xxhash64'`).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..functions.text import _base60
 
 # 31-bit Mersenne prime: universal-hash products stay < 2^62 (no int64
 # overflow under Spark's default ANSI arithmetic)
@@ -52,26 +61,11 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def word_shingles(text_col, k: int = 3):
-    """Array of k-word shingles (native: split + sequence + slice joins)."""
-    words = F.split(F.lower(text_col), r"\s+")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n >= k, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)))).otherwise(F.array(F.concat_ws(" ", words)))
-
-
 def _hash_params(n_hashes: int, seed: int = 42):
     rng = np.random.default_rng(seed)
     a = rng.integers(1, _MERSENNE, n_hashes, dtype=np.int64)
     b = rng.integers(0, _MERSENNE, n_hashes, dtype=np.int64)
     return a.tolist(), b.tolist()
-
-
-def _base60(col) -> F.Column:
-    """First 60 bits of md5 as a non-negative long — the cross-engine
-    canonical string hash (identical in DuckDB via
-    CAST('0x'||substring(md5(x),1,15) AS UBIGINT))."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def _base_hash(col, base_hash: str) -> F.Column:
@@ -85,82 +79,96 @@ def _base_hash(col, base_hash: str) -> F.Column:
     raise ValueError(f"unknown base_hash {base_hash!r}")
 
 
-def _shingle_bases(
-    df: DataFrame, text_col: str, id_col: str, shingle_k: int, base_hash: str
-) -> DataFrame:
-    """(id, __bases array<long>) — per-document k-word shingle base hashes
-    mod the Mersenne prime. base_hash='md5' hashes the literal shingle
-    STRINGS (bit-reproducible in ANSI SQL); 'xxhash64' never materializes
-    strings — each word hashes once, a shingle's base is the polynomial of
-    its k word hashes (building 8-word substrings costs ~10× everything
-    else combined at corpus scale). NULL text is dropped."""
-    df = df.filter(F.col(text_col).isNotNull())
-    if base_hash == "xxhash64":
-        hs = F.expr(
-            f"transform(split(lower({text_col}), '\\\\s+'),"
-            f" w -> pmod(xxhash64(w), {_MERSENNE}))"
-        )
-        # unrolled element_at polynomial (identical values to the
-        # aggregate(slice(...)) fold it replaces — same fold order from
-        # acc=0): slice() allocated a fresh k-array per shingle, pure
-        # per-shingle allocation churn on the hottest expression
-        poly = "0L"
-        for j in range(shingle_k):
-            poly = f"({poly} * 1000003 + element_at(__hs, i + {j + 1})) % {_MERSENNE}"
-        bases = F.expr(
-            f"CASE WHEN size(__hs) >= {shingle_k} THEN"
-            f" transform(sequence(0, size(__hs) - {shingle_k}), i -> {poly})"
-            f" ELSE array(aggregate(__hs, 0L,"
-            f" (acc, x) -> (acc * 1000003 + x) % {_MERSENNE})) END"
-        )
-        return df.select(F.col(id_col), hs.alias("__hs")).select(
-            id_col, bases.alias("__bases")
-        )
-    return df.select(
-        F.col(id_col),
-        F.transform(
-            word_shingles(F.col(text_col), shingle_k),
-            lambda s: _base_hash(s, base_hash),
-        ).alias("__bases"),
+def _words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, __w array<string>) — the shingle family's one word binding.
+    NULL text is no document and is dropped (the md5 shingle builder would
+    otherwise hash NULL as '' via concat_ws's null-skipping and pair every
+    NULL doc with every empty doc); split(lower(text)) is projected as a
+    column exactly once. Every shingle expression reads the bound column:
+    a split inlined into the shingle lambda is re-evaluated per shingle,
+    O(words²) per document (measured 78.9 s vs 3.9 s at 360 words)."""
+    return df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col), F.split(F.lower(F.col(text_col)), r"\s+").alias("__w")
     )
 
 
-def _word_hashes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, __hs array<long>) per-word xxhash64 mod the Mersenne prime —
-    the input of the IN-KERNEL sliding polynomial (_poly_windows_np).
+def _shingles(words: F.Column, k: int) -> F.Column:
+    """k-word shingle strings over a BOUND words column (see _words); a
+    document shorter than k words is one whole-text shingle, so the array
+    is never empty."""
+    n = F.size(words)
+    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
+    return F.when(
+        n >= k, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)))
+    ).otherwise(F.array(F.concat_ws(" ", words)))
 
-    Round-6 measurement: the JVM `transform(sequence(...), i -> poly)`
-    shingle polynomial in _shingle_bases costs ~2.6 s of the 3.35 s scan
-    floor at 500k docs (k=8) — Catalyst evaluates ~k element_at + mul +
-    mod steps per window per document interpreted-per-element, while the
-    word hashing itself is only ~0.76 s. Shipping the word-hash arrays to
-    the Arrow kernel and running the polynomial as k vectorized numpy
-    passes over the batch's flat values buffer computes identical values
-    at a fraction of the cost (guide §4.2: hand whole batches to
-    vectorized native code). md5 keeps the JVM string path (its cost IS
-    the md5 of shingle strings — nothing to vectorize in the kernel)."""
-    df = df.filter(F.col(text_col).isNotNull())
-    return df.select(
+
+def _doc_hashes(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    base_hash: str,
+    fold: bool = True,
+) -> DataFrame:
+    """(id, __h array<long>) — the shingle family's one front end: per
+    non-NULL document, the base hashes mod M of its k-word shingles, over
+    the _words binding. Never empty.
+
+    base_hash='md5' hashes the literal shingle STRINGS (bit-reproducible
+    in ANSI SQL). 'xxhash64' never materializes strings — each word hashes
+    once and a shingle's base is the polynomial of its k word hashes
+    (acc·1000003 + h mod M from acc=0; a document shorter than k words
+    folds whole), since building k-word substrings costs ~10× everything
+    else combined at corpus scale. fold=False returns the xxhash64 WORD
+    hashes unfolded, for the Arrow kernels that run the polynomial in
+    numpy (_poly_windows_np). At k=1 every form is the per-word hash."""
+    words = _words(df, text_col, id_col)
+    if base_hash != "xxhash64" and k > 1:
+        return words.select(
+            F.col(id_col),
+            F.transform(
+                _shingles(F.col("__w"), k), lambda s: _base_hash(s, base_hash)
+            ).alias("__h"),
+        )
+    hs = words.select(
+        F.col(id_col),
+        F.transform("__w", lambda w: _base_hash(w, base_hash)).alias("__h"),
+    )
+    if k == 1 or not fold:
+        return hs
+    # unrolled element_at polynomial (identical values to an
+    # aggregate(slice(...)) fold — same fold order from acc=0): slice()
+    # allocated a fresh k-array per shingle, pure per-shingle allocation
+    # churn on the hottest expression
+    poly = "0L"
+    for j in range(k):
+        poly = f"({poly} * 1000003 + element_at(__h, i + {j + 1})) % {_MERSENNE}"
+    return hs.select(
         F.col(id_col),
         F.expr(
-            f"transform(split(lower({text_col}), '\\\\s+'),"
-            f" w -> pmod(xxhash64(w), {_MERSENNE}))"
-        ).alias("__hs"),
+            f"CASE WHEN size(__h) >= {k} THEN"
+            f" transform(sequence(0, size(__h) - {k}), i -> {poly})"
+            f" ELSE array(aggregate(__h, 0L,"
+            f" (acc, x) -> (acc * 1000003 + x) % {_MERSENNE})) END"
+        ).alias("__h"),
     )
 
 
 def _poly_windows_np(flat, lens, k: int):
     """Vectorized per-document sliding k-polynomial over the concatenated
     word-hash arrays of one Arrow batch (flat int64 values + per-doc
-    lens). Matches _shingle_bases exactly: n-k+1 window polynomials
-    (acc·1000003 + h mod M, acc from 0) when n >= k, else ONE whole-doc
-    Horner fold. Returns (bases_flat, out_lens).
+    lens). Matches the JVM fold of _doc_hashes exactly: n-k+1 window
+    polynomials (acc·1000003 + h mod M, acc from 0) when n >= k, else ONE
+    whole-doc Horner fold. Returns (bases_flat, out_lens).
 
-    The polynomial runs as k vectorized multiply-add-mod passes over the
-    WHOLE batch at once; per-doc boundaries are enforced afterwards by
-    masking window positions whose start and end fall in different
-    documents. acc < M = 2^31 keeps acc·1000003 < 2^51 — int64-safe,
-    same bound as the JVM form."""
+    Round-6 measurement: the JVM per-window polynomial cost ~2.6 s of the
+    3.35 s scan floor at 500k docs (k=8) against ~0.76 s for the word
+    hashing itself; k vectorized multiply-add-mod passes over the WHOLE
+    batch compute identical values at a fraction of the cost. Per-doc
+    boundaries are enforced afterwards by masking window positions whose
+    start and end fall in different documents. acc < M = 2^31 keeps
+    acc·1000003 < 2^51 — int64-safe, same bound as the JVM form."""
     n_docs = lens.size
     starts = np.zeros(n_docs, dtype=np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
@@ -192,7 +200,8 @@ def _poly_windows_np(flat, lens, k: int):
 
 def _flat_lists(batch_col):
     """(flat int64 values, per-row lens) of an Arrow list column —
-    flatten()/value_lengths() respect slice offsets (see sig_kernel)."""
+    flatten()/value_lengths() respect a slice offset, which the raw
+    offsets buffer does not."""
     flat = batch_col.flatten().to_numpy(zero_copy_only=False).astype(
         np.int64, copy=False
     )
@@ -200,6 +209,63 @@ def _flat_lists(batch_col):
         np.int64, copy=False
     )
     return flat, lens
+
+
+def _doc_kernel(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    base_hash: str,
+    per_batch,
+    out_cols: str,
+) -> DataFrame:
+    """The shingle family's one Python boundary: a map-only mapInArrow
+    over the front end's (id, __h) arrays. Each non-empty Arrow batch is
+    read once — flat int64 bases plus per-document lens, the xxhash64
+    k-polynomial folded in numpy (_poly_windows_np) — and handed to
+    `per_batch(ids, bases, lens)`, which returns the output RecordBatch
+    (id_col plus `out_cols`, a DDL column list)."""
+    src = _doc_hashes(df, text_col, id_col, k, base_hash, fold=False)
+    poly = base_hash == "xxhash64"
+
+    def kernel(batches):
+        for batch in batches:
+            ids, lst = batch.column(0), batch.column(1)
+            if len(lst) == 0:
+                continue
+            flat, lens = _flat_lists(lst)
+            # every list must be non-null with >=1 element (the _words
+            # contract): an empty slice would make a reduceat silently read
+            # the NEXT document's first hash, and a null list arrives as
+            # float64 NaN -> garbage int64. Fail loudly instead.
+            if lst.null_count or lens.min() == 0:
+                raise AssertionError(
+                    "shingle kernel: input must be non-null lists with >=1 "
+                    "element (upstream contract violated)"
+                )
+            if poly:
+                flat, lens = _poly_windows_np(flat, lens, k)
+            yield per_batch(ids, flat, lens)
+
+    id_t = src.schema[id_col].dataType.simpleString()
+    return src.mapInArrow(kernel, f"{id_col} {id_t}, {out_cols}")
+
+
+def _unique_rows(ids, doc_of, vals, id_col: str):
+    """(id, __h) RecordBatch of each document's DISTINCT values, without a
+    per-document Python loop: vals < 2^31, so (doc_index << 31) | val is
+    collision-free within a batch and ONE np.unique over the packed keys
+    yields every document's sorted distinct values; ids come back via a
+    vectorized Arrow take."""
+    ukeys = np.unique((doc_of << 31) | vals)
+    return pa.RecordBatch.from_arrays(
+        [
+            ids.take(pa.array(ukeys >> 31, type=pa.int32())),
+            pa.array(ukeys & np.int64((1 << 31) - 1), type=pa.int64()),
+        ],
+        [id_col, "__h"],
+    )
 
 
 def minhash_signatures(
@@ -210,7 +276,6 @@ def minhash_signatures(
     shingle_k: int = 3,
     seed: int = 42,
     base_hash: str = "md5",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """(id, sig array<long>[n_hashes]) — MAP-ONLY plan, no shuffle at all.
 
@@ -218,124 +283,54 @@ def minhash_signatures(
     mod M (universal hashing over the Mersenne prime 2^31−1); signature
     slot i = min over the document's shingles.
 
-    kernel='arrow' (DEFAULT, adopted on measurement — BASELINE.md round 4):
-    the shingle-base arrays are computed JVM-side (`_shingle_bases`), then
-    a mapInArrow kernel does the 64 min-folds in numpy — the Arrow list
-    column's flat values + offsets are read zero-copy and each fold is one
-    vectorized (flat·a_i + b_i) mod M pass followed by
+    The shingle bases come from the front end (_doc_hashes), then the
+    mapInArrow kernel (_doc_kernel) does the n_hashes min-folds in numpy:
+    each fold is one vectorized (flat·a_i + b_i) mod M pass followed by
     `np.minimum.reduceat` at the document offsets. Measured at 500k docs
-    (120-word docs, forced evaluation): 4.5 s vs the native form's
-    13.9 s — and 4.0 s is the bases-computation floor, so the fold cost
-    ~vanishes. Values are bit-identical to the native form (int64
-    arithmetic is the same; equivalence-tested per row). A shift/mask
-    Mersenne reduction instead of np.mod was measured SLOWER (10.3 s —
-    extra temporaries beat the div savings; same conclusion as the JVM
-    codegen form, NOTES). Selection stays map-only so the 100 TB shape is
-    unchanged; the Arrow boundary adds one batch serde of the bases
-    arrays, already paid for by the 3× fold win.
-
-    kernel='native' keeps the all-JVM form for sessions that must avoid
-    Python workers: n_hashes `array_min(transform(...))` expressions over
-    the per-document shingle-base array. An explode + 64-min-aggregate
-    groupBy computes identical values at comparable kernel cost (measured
-    ±20% either way at 500k docs, forced) but pays an exchange of
-    64-column rows — the map-only form wins on a cluster where that
-    exchange is network, and keeps the plan one Project.
+    (120-word docs, forced evaluation): 4.5 s vs 13.9 s for the all-JVM
+    `array_min(transform(...))` form — and 4.0 s is the bases-computation
+    floor, so the fold cost ~vanishes. Values are bit-identical to that
+    form (the same int64 arithmetic; it is the test reference). A
+    shift/mask Mersenne reduction instead of np.mod was measured SLOWER
+    (10.3 s — extra temporaries beat the div savings; NOTES). Selection
+    stays map-only so the 100 TB shape is unchanged; the Arrow boundary
+    adds one batch serde of the bases arrays, already paid for by the 3×
+    fold win.
 
     base_hash='md5' (default) hashes the literal k-word shingle strings —
     bit-reproducible in ANSI SQL (exact DuckDB oracle). 'xxhash64' is the
-    JVM-only fast path and never materializes shingle STRINGS (building
-    the substrings costs ~10× everything else combined): each word is
-    hashed once and a shingle's base is the polynomial of its k word
-    hashes mod M (acc·1000003 + h, bounded < 2^51 — ANSI-safe); shingle
-    identity is collision-equivalent, values differ from the md5 form.
-    Both kernels accept both base hashes (the kernel only sees bases).
+    JVM-only fast path that never materializes shingle STRINGS (see
+    _doc_hashes); shingle identity is collision-equivalent, values differ
+    from the md5 form.
     """
     a, b = _hash_params(n_hashes, seed)
-    # NULL text is no document: _shingle_bases/_word_hashes drop it up
-    # front (the md5 shingle builder would otherwise hash NULL as '' via
-    # concat_ws's null-skipping and pair every NULL doc with every empty
-    # doc)
-    if kernel == "arrow":
-        import pyarrow as pa
 
-        a_loc, b_loc, m, nh, k = a.copy(), b.copy(), _MERSENNE, n_hashes, shingle_k
-        if base_hash == "xxhash64":
-            # in-kernel sliding polynomial (_poly_windows_np): identical
-            # values, ~2.6 s of JVM per-window Horner evaluation at 500k
-            # docs moves into a few vectorized numpy passes
-            src = _word_hashes(df, text_col, id_col)
-            in_kernel_poly = True
-        else:
-            src = _shingle_bases(df, text_col, id_col, shingle_k, base_hash)
-            in_kernel_poly = False
-
-        def sig_kernel(batches):
-            for batch in batches:
-                ids = batch.column(0)
-                lst = batch.column(1)
-                n = len(lst)
-                if n == 0:
-                    continue
-                # flatten() respects any slice offset; value_lengths()
-                # likewise — derive starts from lengths rather than the
-                # raw offsets buffer (which ignores slicing)
-                flat, lens = _flat_lists(lst)
-                # reduceat invariant: every input list is non-null with
-                # >=1 element (guaranteed by the whole-text-gram branch /
-                # split of non-null text). An empty slice would make
-                # reduceat silently read the NEXT document's first hash; a
-                # null list arrives as float64 NaN -> garbage int64. Fail
-                # loudly instead.
-                if lst.null_count or lens.min() == 0:
-                    raise AssertionError(
-                        "minhash arrow kernel: input must be non-null "
-                        "lists with >=1 element (upstream contract "
-                        "violated)"
-                    )
-                if in_kernel_poly:
-                    flat, lens = _poly_windows_np(flat, lens, k)
-                starts = np.zeros(n, dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                sig = np.empty((n, nh), dtype=np.int64)
-                tmp = np.empty_like(flat)
-                for i in range(nh):
-                    np.multiply(flat, a_loc[i], out=tmp)
-                    np.add(tmp, b_loc[i], out=tmp)
-                    np.mod(tmp, m, out=tmp)
-                    sig[:, i] = np.minimum.reduceat(tmp, starts)
-                out_vals = pa.array(sig.reshape(-1), type=pa.int64())
-                out_offs = pa.array(
-                    np.arange(0, (n + 1) * nh, nh, dtype=np.int32),
-                    type=pa.int32(),
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.ListArray.from_arrays(out_offs, out_vals)],
-                    [id_col, "sig"],
-                )
-
-        id_t = src.schema[id_col].dataType.simpleString()
-        return src.mapInArrow(
-            sig_kernel, f"{id_col} {id_t}, sig array<bigint>"
+    def signatures(ids, flat, lens):
+        n = lens.size
+        starts = np.zeros(n, dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        sig = np.empty((n, n_hashes), dtype=np.int64)
+        tmp = np.empty_like(flat)
+        for i in range(n_hashes):
+            np.multiply(flat, a[i], out=tmp)
+            np.add(tmp, b[i], out=tmp)
+            np.mod(tmp, _MERSENNE, out=tmp)
+            sig[:, i] = np.minimum.reduceat(tmp, starts)
+        offs = np.arange(0, (n + 1) * n_hashes, n_hashes, dtype=np.int32)
+        return pa.RecordBatch.from_arrays(
+            [
+                ids,
+                pa.ListArray.from_arrays(
+                    pa.array(offs, type=pa.int32()),
+                    pa.array(sig.reshape(-1), type=pa.int64()),
+                ),
+            ],
+            [id_col, "sig"],
         )
-    if kernel != "native":
-        raise ValueError(f"unknown kernel {kernel!r} (want 'arrow' or 'native')")
-    with_bases = _shingle_bases(df, text_col, id_col, shingle_k, base_hash)
-    # one generated SQL string for the 64 mins (per-node py4j round-trips
-    # on a 64-expression tree are the slow path — NOTES.md)
-    mins = ", ".join(
-        f"array_min(transform(__bases, x -> (x * {a[i]}L + {b[i]}L) % {_MERSENNE}))"
-        for i in range(n_hashes)
+
+    return _doc_kernel(
+        df, text_col, id_col, shingle_k, base_hash, signatures, "sig array<bigint>"
     )
-    # No trailing sig-null filter: the upfront text-IS-NOT-NULL filter
-    # already guarantees non-null signatures (split of non-null text
-    # yields ≥1 element and both CASE branches produce non-null longs).
-    # A `filter(sig[0] IS NOT NULL)` here is not just redundant — Catalyst
-    # pushes it below the projection, inlining the ENTIRE 64-min array
-    # into the predicate, which then evaluates the full signature kernel
-    # a second time without codegen sharing (measured 78.7 s vs 14.8 s
-    # at 500k docs — a 5.3× regression from one no-op filter).
-    return with_bases.select(id_col, F.expr(f"array({mins})").alias("sig"))
 
 
 def _band_explode(
@@ -497,9 +492,10 @@ def ngram_jaccard(
     shingle_k: int = 3,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs (verification stage after
-    LSH): pairs(id_a, id_b) → (id_a, id_b, jaccard)."""
-    sh = df.select(
-        F.col(id_col), F.array_distinct(word_shingles(F.col(text_col), shingle_k)).alias("sh")
+    LSH): pairs(id_a, id_b) → (id_a, id_b, jaccard) over the documents'
+    distinct k-word shingle strings. NULL text is no document (_words)."""
+    sh = _words(df, text_col, id_col).select(
+        F.col(id_col), F.array_distinct(_shingles(F.col("__w"), shingle_k)).alias("sh")
     )
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
@@ -514,58 +510,16 @@ def _unique_gram_rows(
 ) -> DataFrame:
     """(id, __h) — one row per DISTINCT n-gram base hash per document,
     as a single map-only mapInArrow pass (no shuffle, text never leaves
-    the scan). Shared by cross_doc_ngram_profile (arrow kernel) and
-    decontaminate's corpus side.
+    the scan). Shared by cross_doc_ngram_profile and decontaminate's
+    corpus side."""
 
-    xxhash64: the kernel receives per-word hash arrays and runs the
-    sliding polynomial itself (_poly_windows_np — identical values to the
-    JVM _shingle_bases form at a fraction of the scan cost). md5: the
-    kernel receives the JVM-computed base arrays (the exact-oracle path
-    hashes literal shingle strings; only the per-doc unique runs here).
+    def distinct_grams(ids, bases, lens):
+        doc_of = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
+        return _unique_rows(ids, doc_of, bases, id_col)
 
-    Per-doc unique without a per-document Python loop: bases < 2^31, so
-    (doc_index << 31) | base is collision-free within a batch and ONE
-    np.unique over the packed keys yields every document's sorted
-    distinct grams; ids come back via a vectorized Arrow take."""
-    import pyarrow as pa
-
-    if base_hash == "xxhash64":
-        src = _word_hashes(df, text_col, id_col)
-        in_kernel_poly = True
-    else:
-        src = _shingle_bases(df, text_col, id_col, ngram, base_hash)
-        in_kernel_poly = False
-    k = ngram
-
-    def gram_kernel(batches):
-        for batch in batches:
-            ids = batch.column(0)
-            lst = batch.column(1)
-            n = len(lst)
-            if n == 0:
-                continue
-            flat, lens = _flat_lists(lst)
-            if lst.null_count or (lens.size and lens.min() == 0):
-                raise AssertionError(
-                    "gram kernel: input lists must be non-null with >=1 "
-                    "element (upstream text filter contract violated)"
-                )
-            if in_kernel_poly:
-                bases, out_lens = _poly_windows_np(flat, lens, k)
-            else:
-                bases, out_lens = flat, lens
-            doc_of = np.repeat(np.arange(n, dtype=np.int64), out_lens)
-            ukeys = np.unique((doc_of << 31) | bases)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(ukeys >> 31, type=pa.int32())),
-                    pa.array(ukeys & np.int64((1 << 31) - 1), type=pa.int64()),
-                ],
-                [id_col, "__h"],
-            )
-
-    id_t = src.schema[id_col].dataType.simpleString()
-    return src.mapInArrow(gram_kernel, f"{id_col} {id_t}, __h long")
+    return _doc_kernel(
+        df, text_col, id_col, ngram, base_hash, distinct_grams, "__h long"
+    )
 
 
 # Sort-heavy per-hash count stages (the gram-stream window) get this many
@@ -585,7 +539,6 @@ def cross_doc_ngram_profile(
     ngram: int = 8,
     base_hash: str = "md5",
     sample_mod: int | None = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """(id, n_ngrams, dup_ngrams, dup_fraction) — the fraction of a
     document's DISTINCT word n-grams that also occur in at least one
@@ -594,12 +547,21 @@ def cross_doc_ngram_profile(
     boilerplate/templated/near-copied text that MinHash's whole-document
     Jaccard can miss when only a passage is shared).
 
-    Scale shape: explode per-doc distinct n-gram hashes (16-byte rows) →
-    per-hash doc counts (map-side combined groupBy) → join the counts
-    back → one aggregation per doc. Both shuffles carry (hash[, id])
-    only — document text never leaves the scan stage. With
-    base_hash='md5' the whole computation has an exact DuckDB oracle
-    (the _base60 cross-engine hash).
+    Scale shape: a mapInArrow kernel emits per-document distinct
+    (id, hash) rows directly (_unique_gram_rows; for xxhash64 it also
+    runs the sliding polynomial itself), and the per-hash doc count runs
+    as a window count over the hash partition (widened by
+    _COUNT_SHUFFLE_FACTOR to keep the sort in memory) before one
+    aggregation per doc. Both shuffles carry (hash[, id]) only — document
+    text never leaves the scan stage. Against the all-JVM form
+    (checkpoint + explode + (id, hash) distinct + count join, now the
+    test reference) this deletes the 59M-row localCheckpoint, the explode
+    Generate, the distinct exchange AND the count join — round-6
+    measurement at 500k docs: ~8 s vs 25-42 s, identical values. No join
+    also means no AQE-misestimated-broadcast hazard on the statless
+    Python stream (a counts-side broadcast OOM'd a joined variant in
+    testing). With base_hash='md5' the whole computation has an exact
+    DuckDB oracle (the _base60 cross-engine hash).
 
     sample_mod=m keeps only n-grams whose hash ≡ 0 (mod m): a 1/m
     deterministic hash sample — the same subset in every document, so
@@ -609,116 +571,44 @@ def cross_doc_ngram_profile(
     108 s exact at 500k docs, ~51M keys), so the sample cuts it ~m×;
     None (default) is exact and what the driver oracle checks.
 
-    kernel='arrow' (DEFAULT, adopted on measurement — BASELINE.md round
-    4; rebuilt round 6): a mapInArrow kernel emits per-document distinct
-    (id, hash) rows directly (for xxhash64 it also runs the sliding
-    polynomial itself — _poly_windows_np), and the per-hash doc count
-    runs as a window count over the hash partition (widened by
-    _COUNT_SHUFFLE_FACTOR to keep the sort in memory). Versus the native
-    form this deletes the 59M-row localCheckpoint, the explode Generate,
-    the (id, hash) distinct exchange AND the count join — round-6
-    measurement at 500k docs: ~8 s vs 25-42 s native, identical values.
-    No join also means no AQE-misestimated-broadcast hazard on the
-    statless Python stream (a counts-side broadcast OOM'd the joined
-    variant in testing).
-    kernel='native' keeps the all-JVM exact path (checkpoint + explode +
-    distinct + join) for sessions that must avoid Python workers.
-
-    CONTRACT: id_col must be unique (it is the corpus key). The two
-    kernels agree on every unique-id corpus (equivalence-tested); on a
-    MALFORMED corpus with duplicate id rows they diverge in different
-    wrong directions — native silently merges the duplicates' gram sets
-    (its global (id, hash) distinct), arrow counts each row separately
-    and flags the id as a cross-doc dup of itself. Restoring global
-    dedup semantics on the arrow path was measured and REJECTED: a
+    CONTRACT: id_col must be unique (it is the corpus key). On a
+    MALFORMED corpus with duplicate id rows each row is counted
+    separately, so the id is flagged as a cross-doc dup of itself (a
+    global (id, hash) distinct would instead merge the duplicates' gram
+    sets). Restoring global dedup semantics was measured and REJECTED: a
     distinct on the statless Python stream costs 35-66 s at 500k — worse
-    than native — so the precondition is documented (and pinned in
-    test_ngram_profile_duplicate_id_contract) instead of paid for on
-    every well-formed corpus."""
-    # distinct at the HASH level (doc_id, h) — the map-side-combinable
-    # shape (8-byte keys) and exactly what the SQL oracle computes.
+    than the all-JVM form — so the precondition is documented (and
+    pinned in test_ngram_profile_duplicate_id_contract) instead of paid
+    for on every well-formed corpus."""
     df = df.filter(F.col(text_col).isNotNull())
-    if kernel == "arrow":
-        grams = _unique_gram_rows(df, text_col, id_col, ngram, base_hash)
-        if sample_mod is not None:
-            grams = grams.filter(F.col("__h") % sample_mod == 0)
-        # explicit repartition feeding the window: the window reuses this
-        # partitioning (same key), so it is the SAME single exchange —
-        # just at _COUNT_SHUFFLE_FACTOR × the session parallelism, which
-        # keeps each per-hash sort task inside execution memory (414 MB
-        # of spill measured at the default width on 500k docs).
-        n_count_parts = _COUNT_SHUFFLE_FACTOR * int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        profile = (
-            grams.repartition(n_count_parts, "__h")
-            .withColumn(
-                "__docs", F.count("*").over(Window.partitionBy("__h"))
-            )
-            .groupBy(id_col)
-            .agg(
-                F.count("*").alias("n_ngrams"),
-                F.sum((F.col("__docs") >= 2).cast("long")).alias("dup_ngrams"),
-            )
-            .withColumn("dup_fraction", F.col("dup_ngrams") / F.col("n_ngrams"))
-        )
-        if sample_mod is not None:
-            profile = (
-                df.select(id_col)
-                .join(profile, id_col, "left")
-                .fillna({"n_ngrams": 0, "dup_ngrams": 0})
-            )
-        return profile
-    if kernel != "native":
-        raise ValueError(f"unknown kernel {kernel!r} (want 'arrow' or 'native')")
-    if base_hash == "xxhash64":
-        # string-free scan: the word-hash polynomial array from
-        # _shingle_bases, MATERIALIZED (localCheckpoint) before the
-        # explode. Exploding the live polynomial expression is trap 15b
-        # (CollapseProject inlines the mega-expression into Generate and
-        # abandons the fast path — measured minutes vs ~108 s at 500k);
-        # exploding the checkpointed plain array column is the fast path,
-        # and skipping shingle-STRING construction cuts the scan ~10×.
-        bases = _shingle_bases(df, text_col, id_col, ngram, base_hash)
-        grams = bases.localCheckpoint(eager=False).select(
-            id_col, F.explode("__bases").alias("__h")
-        )
-    else:
-        # md5 hashes the literal shingle strings — bit-reproducible in
-        # ANSI SQL, the exact-oracle anchor; string explode is inherent.
-        # explode_outer, not explode: the non-outer Generate pushes an
-        # implicit size()>0 filter below the Project that re-evaluates the
-        # whole shingle CASE/transform per row (hard-won fact 23);
-        # word_shingles never returns an empty array for non-null text
-        grams = df.select(
-            F.col(id_col),
-            F.explode_outer(word_shingles(F.col(text_col), ngram)).alias("__g"),
-        ).select(id_col, _base_hash(F.col("__g"), base_hash).alias("__h"))
+    grams = _unique_gram_rows(df, text_col, id_col, ngram, base_hash)
     if sample_mod is not None:
         grams = grams.filter(F.col("__h") % sample_mod == 0)
-    # NB the distinct feeds two consumers and is deliberately NOT
-    # checkpointed: materializing the ~0.2·docs·grams distinct rows costs
-    # MORE than re-running the exchange from the (checkpointed, compact)
-    # bases arrays — measured 41 s vs 19-24 s at 500k docs. The arrays
-    # are the cheap thing to pin; the exploded stream is not.
-    grams = grams.distinct()
-    counts = grams.groupBy("__h").agg(F.count("*").alias("__docs"))
+    # explicit repartition feeding the window: the window reuses this
+    # partitioning (same key), so it is the SAME single exchange — just at
+    # _COUNT_SHUFFLE_FACTOR × the session parallelism, which keeps each
+    # per-hash sort task inside execution memory (414 MB of spill
+    # measured at the default width on 500k docs).
+    n_count_parts = _COUNT_SHUFFLE_FACTOR * int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
     profile = (
-        grams.join(counts, "__h")
+        grams.repartition(n_count_parts, "__h")
+        .withColumn("__docs", F.count("*").over(Window.partitionBy("__h")))
         .groupBy(id_col)
         .agg(
             F.count("*").alias("n_ngrams"),
             F.sum((F.col("__docs") >= 2).cast("long")).alias("dup_ngrams"),
         )
         # raw IEEE division of the two longs — bit-identical across
-        # engines, no rounding needed (rounding would reintroduce the
-        # JVM shortest-repr vs exact-value divergence)
+        # engines, no rounding needed (rounding would reintroduce the JVM
+        # shortest-repr vs exact-value divergence)
         .withColumn("dup_fraction", F.col("dup_ngrams") / F.col("n_ngrams"))
     )
     if sample_mod is not None:
         # under sampling a doc can have ZERO sampled grams (certain for
-        # short docs) and would silently vanish from the profile — emit
-        # it with zero counts and a NULL fraction (unknown, not 0.0), so
+        # short docs) and would silently vanish from the profile — emit it
+        # with zero counts and a NULL fraction (unknown, not 0.0), so
         # consumers joining back to the corpus see every document
         profile = (
             df.select(id_col)
@@ -735,7 +625,6 @@ def winnow_fingerprints(
     ngram: int = 8,
     window: int = 8,
     base_hash: str = "md5",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """(id, __h) — the document's DISTINCT winnowing fingerprints
     (Schleimer/Wilkerson/Aiken, SIGMOD'03): the set of minima over every
@@ -747,134 +636,53 @@ def winnow_fingerprints(
     needs no tie/position bookkeeping — only the recorded-position rule
     does, and this profile never records positions).
 
-    Scale shape: the whole selection is ONE map-only projection per
-    document (hash array → window-min array → array_distinct) — no
-    shuffle, no Python; only fingerprints (~2/(w+1) of the grams) leave
-    the scan. The projection is lineage-truncated before the explode:
-    CollapseProject would otherwise inline the generated window
-    expression into Generate and abandon the codegen fast path
-    (NOTES hard-won fact 15b).
-
     Documents with fewer than `window` n-grams yield their single overall
     minimum (the standard short-document rule), so every non-empty
     document has ≥1 fingerprint.
 
-    Hash input comes from _shingle_bases: positional per-doc base-hash
-    arrays — md5 hashes the literal shingle strings (exact DuckDB oracle),
-    xxhash64 never materializes shingle strings at all (word-hash
-    polynomial; string construction measured ~10× everything else at
-    corpus scale).
-
-    TWO materialization boundaries, both required (measured, round 3):
-    (1) __bases is checkpointed BEFORE the window expression — the
-    window-min lambda references the bases array inside slice(), and
-    Catalyst does not hoist lambda-internal subexpressions, so collapsing
-    would re-evaluate the whole generated bases expression PER WINDOW
-    POSITION (O(len²·k) — the job effectively hangs at 500k docs);
-    (2) __fps is checkpointed BEFORE the explode — exploding a live
-    generated array inlines it into Generate and abandons the codegen
-    fast path (NOTES hard-won fact 15b). The fps arrays are ~2/(w+1) the
-    size of the bases, so the second checkpoint is small.
+    Scale shape: one map-only mapInArrow pass (_doc_kernel) over the
+    front end's positional per-doc base-hash arrays: numpy
+    sliding_window_view gives the per-doc window minima in one vectorized
+    pass and the kernel emits exploded distinct (id, __h) rows directly.
+    Only fingerprints (~2/(w+1) of the grams) leave the scan. Adopted on
+    measurement over the all-JVM window-min form (VERDICT r3 #7 —
+    BASELINE.md round 4): 14.1 s vs 20.4 s warm at 500k docs, identical
+    value sets, and ZERO checkpoints — the JVM form needed two (Catalyst
+    re-evaluates a lambda-captured bases expression per window position,
+    NOTES fact 18; exploding a live generated array abandons the codegen
+    fast path, fact 15b), while the Arrow boundary isolates both.
     """
-    if kernel == "arrow":
-        # DEFAULT (adopted on measurement, VERDICT r3 #7 — BASELINE.md
-        # round 4): 14.1 s vs the native form's 20.4 s warm at 500k docs,
-        # identical value sets (equivalence-tested), and ZERO checkpoints
-        # — the mapInPandas boundary isolates the generated bases
-        # expression from the window-min (no lambda re-evaluation
-        # hazard, NOTES fact 18) and emits exploded (id, __h) rows
-        # directly (no pre-explode array to truncate, fact 15b). numpy
-        # sliding_window_view gives the per-doc window minima in one
-        # vectorized pass; the selection stays map-only, so the 100 TB
-        # shape is unchanged. kernel='native' keeps the all-JVM form
-        # (two localCheckpoints) for sessions that must avoid Python
-        # workers entirely.
-        import pyarrow as pa
 
-        win = window
-        if base_hash == "xxhash64":
-            src = _word_hashes(df, text_col, id_col)
-            in_kernel_poly = True
+    def window_minima(ids, bases, blens):
+        # global sliding-min over the batch's concatenated bases, per-doc
+        # boundaries enforced by the same start/end-in-same-doc mask as
+        # the polynomial; docs with fewer than `window` grams take their
+        # single overall min (reduceat)
+        n_docs = blens.size
+        bstarts = np.zeros(n_docs, dtype=np.int64)
+        np.cumsum(blens[:-1], out=bstarts[1:])
+        out_lens = np.where(blens >= window, blens - window + 1, 1).astype(np.int64)
+        out = np.empty(int(out_lens.sum()), dtype=np.int64)
+        W = bases.size - window + 1
+        if W > 0:
+            mins = sliding_window_view(bases, window).min(axis=1)
+            doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), blens)
+            valid = doc_of[:W] == doc_of[window - 1:]
         else:
-            src = _shingle_bases(df, text_col, id_col, ngram, base_hash)
-            in_kernel_poly = False
-        k = ngram
+            mins = np.empty(0, dtype=np.int64)
+            valid = np.empty(0, dtype=bool)
+        long_doc = blens >= window
+        out_doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), out_lens)
+        out_is_long = long_doc[out_doc_of]
+        out[out_is_long] = mins[valid]
+        if not long_doc.all():
+            whole_mins = np.minimum.reduceat(bases, bstarts)
+            out[~out_is_long] = whole_mins[out_doc_of[~out_is_long]]
+        return _unique_rows(ids, out_doc_of, out, id_col)
 
-        def fps_kernel(batches):
-            from numpy.lib.stride_tricks import sliding_window_view
-
-            for batch in batches:
-                ids = batch.column(0)
-                lst = batch.column(1)
-                n = len(lst)
-                if n == 0:
-                    continue
-                flat, lens = _flat_lists(lst)
-                if in_kernel_poly:
-                    bases, blens = _poly_windows_np(flat, lens, k)
-                else:
-                    bases, blens = flat, lens
-                # global sliding-min over the batch's concatenated bases,
-                # per-doc boundaries enforced by the same start/end-in-
-                # same-doc mask as the polynomial; docs with fewer than
-                # `win` grams take their single overall min (reduceat).
-                n_docs = blens.size
-                bstarts = np.zeros(n_docs, dtype=np.int64)
-                np.cumsum(blens[:-1], out=bstarts[1:])
-                out_lens = np.where(blens >= win, blens - win + 1, 1).astype(
-                    np.int64
-                )
-                out = np.empty(int(out_lens.sum()), dtype=np.int64)
-                W = bases.size - win + 1
-                if W > 0:
-                    mins = sliding_window_view(bases, win).min(axis=1)
-                    doc_of = np.repeat(
-                        np.arange(n_docs, dtype=np.int64), blens
-                    )
-                    valid = doc_of[:W] == doc_of[win - 1:]
-                else:
-                    mins = np.empty(0, dtype=np.int64)
-                    valid = np.empty(0, dtype=bool)
-                long_doc = blens >= win
-                out_doc_of = np.repeat(
-                    np.arange(n_docs, dtype=np.int64), out_lens
-                )
-                out_is_long = long_doc[out_doc_of]
-                out[out_is_long] = mins[valid]
-                if not long_doc.all():
-                    whole_mins = np.minimum.reduceat(bases, bstarts)
-                    out[~out_is_long] = whole_mins[out_doc_of[~out_is_long]]
-                ukeys = np.unique((out_doc_of << 31) | out)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(pa.array(ukeys >> 31, type=pa.int32())),
-                        pa.array(
-                            ukeys & np.int64((1 << 31) - 1), type=pa.int64()
-                        ),
-                    ],
-                    [id_col, "__h"],
-                )
-
-        id_t = src.schema[id_col].dataType.simpleString()
-        return src.mapInArrow(fps_kernel, f"{id_col} {id_t}, __h long")
-    if kernel != "native":
-        raise ValueError(f"unknown kernel {kernel!r} (want 'arrow' or 'native')")
-    with_bases = _shingle_bases(df, text_col, id_col, ngram, base_hash).localCheckpoint(
-        eager=False
+    return _doc_kernel(
+        df, text_col, id_col, ngram, base_hash, window_minima, "__h long"
     )
-    hs = F.col("__bases")
-    n = F.size(hs)
-    windows = F.transform(
-        F.sequence(F.lit(0), n - window),
-        lambda i: F.array_min(F.slice(hs, i + 1, window)),
-    )
-    fps = F.array_distinct(
-        F.when(n >= window, windows).otherwise(F.array(F.array_min(hs)))
-    )
-    per_doc = with_bases.select(F.col(id_col), fps.alias("__fps")).localCheckpoint(
-        eager=False
-    )
-    return per_doc.select(id_col, F.explode("__fps").alias("__h"))
 
 
 def winnowed_ngram_profile(
@@ -884,7 +692,6 @@ def winnowed_ngram_profile(
     ngram: int = 8,
     window: int = 8,
     base_hash: str = "md5",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """(id, n_fingerprints, dup_fingerprints, dup_fraction) — the
     cross-document duplication profile over winnowing fingerprints: the
@@ -898,10 +705,10 @@ def winnowed_ngram_profile(
     the whole computation has an exact DuckDB oracle (window-function
     formulation — an independent implementation of the same selection).
     """
-    fp = winnow_fingerprints(df, text_col, id_col, ngram, window, base_hash, kernel)
+    fp = winnow_fingerprints(df, text_col, id_col, ngram, window, base_hash)
     # window count over the hash partition, NOT groupBy+join: the join
-    # form feeds fp to TWO consumers, and on the (checkpoint-free) arrow
-    # kernel path each consumer re-runs the whole winnow kernel —
+    # form feeds fp to TWO consumers, and on the checkpoint-free kernel
+    # path each consumer re-runs the whole winnow kernel —
     # measured 14.4 s join-form vs 7.0-8.5 s window-form at 500k docs,
     # identical outputs (BASELINE.md round-4 third session). One kernel
     # evaluation, two narrow shuffles, no join, and no AQE stats hazard
@@ -967,22 +774,16 @@ def simhash(
     computation is reproducible in DuckDB SQL — see driver ORACLE_SIMHASH."""
     a, b = _hash_params(64, seed)
     half = _MERSENNE // 2
-    df = df.filter(F.col(text_col).isNotNull())  # NULL text is no document
     df = _spread_small_input(df)  # no-op on corpus-scale inputs
-    hw = df.select(
-        F.col(id_col),
-        F.transform(
-            F.split(F.lower(F.col(text_col)), r"\s+"),
-            lambda w: _base_hash(w, base_hash),
-        ).alias("__hw"),
-    )
+    # per-word base hashes: the front end at k=1 (NULL text dropped)
+    hw = _doc_hashes(df, text_col, id_col, 1, base_hash)
     pack = " | ".join(
-        f"(CASE WHEN aggregate(__hw, 0L, (acc, h) -> acc + "
+        f"(CASE WHEN aggregate(__h, 0L, (acc, h) -> acc + "
         f"(CASE WHEN ({a[i]}L * h + {b[i]}L) % {_MERSENNE}L > {half}L "
         f"THEN 1 ELSE -1 END)) > 0 THEN shiftleft(1L, {i}) ELSE 0L END)"
         for i in range(64)
     )
-    # No trailing null filter: the upfront text filter guarantees __hw is
+    # No trailing null filter: the upfront text filter guarantees __h is
     # never NULL, and a `filter(simhash IS NOT NULL)` would be pushed
     # below the projection with the ENTIRE 64-fold pack inlined into the
     # predicate — evaluating the kernel twice (the same 5× trap measured
@@ -990,7 +791,7 @@ def simhash(
     # for callers that bypass the text filter.
     return hw.selectExpr(
         id_col,
-        f"CASE WHEN __hw IS NULL THEN CAST(NULL AS LONG) ELSE ({pack}) END AS simhash",
+        f"CASE WHEN __h IS NULL THEN CAST(NULL AS LONG) ELSE ({pack}) END AS simhash",
     )
 
 
@@ -1227,14 +1028,14 @@ def decontaminate(
     (same contract as the profile ops): a verbatim short benchmark doc in
     the corpus still flags."""
     # explode_outer, not explode: the non-outer Generate pushes an implicit
-    # `size(__bases) > 0` filter BELOW the bases Project, inlining the whole
+    # `size(__h) > 0` filter BELOW the bases Project, inlining the whole
     # shingle mega-expression a second time without codegen sharing (NOTES
-    # hard-won fact 16). _shingle_bases never returns an empty array (short
+    # hard-won fact 16). _doc_hashes never returns an empty array (short
     # docs get the whole-text gram), so outer semantics are identical — the
     # one NULL a null-text row would produce is already filtered upstream.
     bench_grams = (
-        _shingle_bases(benchmark, text_col, id_col, ngram, base_hash)
-        .select(F.explode_outer("__bases").alias("__h"))
+        _doc_hashes(benchmark, text_col, id_col, ngram, base_hash)
+        .select(F.explode_outer("__h").alias("__h"))
         .distinct()
     )
     if base_hash == "xxhash64":
@@ -1245,10 +1046,9 @@ def decontaminate(
         # repeats) and shrinks the join probe stream.
         corpus_grams = _unique_gram_rows(corpus, text_col, id_col, ngram, base_hash)
     else:
-        corpus_grams = (
-            _shingle_bases(corpus, text_col, id_col, ngram, base_hash)
-            .select(id_col, F.explode_outer("__bases").alias("__h"))
-        )
+        corpus_grams = _doc_hashes(
+            corpus, text_col, id_col, ngram, base_hash
+        ).select(id_col, F.explode_outer("__h").alias("__h"))
     bench_side = F.broadcast(bench_grams) if broadcast else bench_grams
     hits = (
         corpus_grams.join(bench_side, "__h")
@@ -1288,9 +1088,9 @@ def intra_doc_repetition(
     array_distinct over the per-document base-hash array — zero shuffles,
     scales as a pure scan. Distinctness is computed on the Mersenne-reduced
     base hashes in BOTH engines (collision-equivalent, exact oracle)."""
-    bases = _shingle_bases(df, text_col, id_col, ngram, base_hash)
-    n = F.size("__bases")
-    d = F.size(F.array_distinct("__bases"))
+    bases = _doc_hashes(df, text_col, id_col, ngram, base_hash)
+    n = F.size("__h")
+    d = F.size(F.array_distinct("__h"))
     return bases.select(
         F.col(id_col),
         n.cast("long").alias("n_ngrams"),

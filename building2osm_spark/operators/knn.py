@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..constants import DEFAULT_CELL_RES, EARTH_RADIUS
-from ..functions.columns import cell_id_col, distance_m_col
+from ..functions.columns import cell_id_col, cell_pack, distance_m_col, grid_xy_col
 
 _M_PER_DEG = 3.141592653589793 * EARTH_RADIUS / 180.0  # equirect metre/degree
 _BROADCAST_MAX_ROWS = 2_000_000  # ~50 MB of (id, lon, lat) — safe to ship
@@ -51,18 +51,13 @@ def _neighbors9(lon, lat, res: int):
     """Array of the 9 cell ids of the 3×3 block around (lon, lat) at res —
     native arithmetic on the cell grid indices."""
     n = F.lit(1 << res).cast("long")
-    ix = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), F.lit(0)), n - 1)
-    iy = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n), F.lit(0)), n - 1)
+    ix, iy = grid_xy_col(lon, lat, res)
     cells = []
     for dx in (-1, 0, 1):
         for dy in (-1, 0, 1):
             jx = F.least(F.greatest(ix + dx, F.lit(0)), n - 1)
             jy = F.least(F.greatest(iy + dy, F.lit(0)), n - 1)
-            cells.append(
-                F.shiftleft(F.lit(res).cast("long"), 54)
-                .bitwiseOR(F.shiftleft(jx.cast("long"), 27))
-                .bitwiseOR(jy.cast("long"))
-            )
+            cells.append(cell_pack(res, jx, jy))
     return F.array_distinct(F.array(*cells))
 
 

@@ -12,11 +12,11 @@ AQE's skew-join splitting stays on as the second line of defence.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import DEFAULT_CELL_RES, MAX_DOWNLOAD
-from ..functions.columns import cell_id_col
+from ..functions.columns import cell_id_col, cell_ixy, cell_pack, cell_parent, cell_res
 
 SPLIT_FACTOR = 0.95  # building2osm.py:456-459,496 — split at ≥0.95 × target
 
@@ -67,7 +67,6 @@ def adaptive_cells(
         levels.append(r)
         r = min(r + 2, 26)
 
-    idx_mask = (1 << 27) - 1
     splits: list[DataFrame] = []  # (cell) at levels[k] that split further
     for k, res in enumerate(levels[:-1]):
         hot = (
@@ -76,14 +75,7 @@ def adaptive_cells(
             .select("cell")
         )
         if k > 0:
-            shift = res - levels[k - 1]
-            ix = F.shiftrightunsigned("cell", 27).bitwiseAND(F.lit(idx_mask))
-            iy = F.col("cell").bitwiseAND(F.lit(idx_mask))
-            parent = (
-                F.shiftleft(F.lit(levels[k - 1]).cast("long"), 54)
-                .bitwiseOR(F.shiftleft(F.shiftrightunsigned(ix, shift), 27))
-                .bitwiseOR(F.shiftrightunsigned(iy, shift))
-            )
+            parent = cell_parent(F.col("cell"), levels[k - 1])
             hot = hot.join(
                 F.broadcast(splits[k - 1].withColumnRenamed("cell", "__parent")),
                 parent == F.col("__parent"),
@@ -193,20 +185,6 @@ def partition_metrics(df: DataFrame) -> DataFrame:
     )
 
 
-def cell_parent_col(cell: Column) -> Column:
-    """Parent cell id (one resolution up) as pure Catalyst bit arithmetic —
-    the Column twin of cells.cell_parent (same packing: res<<54|ix<<27|iy)."""
-    mask = F.lit((1 << 27) - 1)
-    res = F.shiftrightunsigned(cell, 54)
-    ix = F.shiftrightunsigned(cell, 27).bitwiseAND(mask)
-    iy = cell.bitwiseAND(mask)
-    return (
-        F.shiftleft((res - F.lit(1)).cast("long"), 54)
-        .bitwiseOR(F.shiftleft(F.shiftrightunsigned(ix, 1), 27))
-        .bitwiseOR(F.shiftrightunsigned(iy, 1))
-    )
-
-
 def compact_cover(
     cover: DataFrame,
     cell_col: str = "cell",
@@ -245,9 +223,9 @@ def compact_cover(
     cur = cover.select(*gcols, cell_col).distinct()
     parts: list[DataFrame] = []
     for _ in range(levels):
-        with_parent = cur.withColumn("__parent", cell_parent_col(F.col(cell_col)))
+        with_parent = cur.withColumn("__parent", cell_parent(F.col(cell_col)))
         promoted = (
-            with_parent.filter(F.shiftrightunsigned(F.col(cell_col), 54) > 0)
+            with_parent.filter(cell_res(F.col(cell_col)) > 0)
             .groupBy(*gcols, "__parent")
             .agg(F.count("*").alias("__n"))
             .filter(F.col("__n") == 4)
@@ -273,10 +251,10 @@ def uncompact_cover(
     Python wrapper doesn't). Cells FINER than `res` raise at execution —
     they have no ancestor row at `res` that preserves coverage semantics.
     """
-    m = (1 << 27) - 1
     other = [x for x in cover.columns if x != cell_col]
     prefix = [F.col(x) for x in other]
-    r = F.shiftrightunsigned(F.col(cell_col), 54)
+    r = cell_res(F.col(cell_col))
+    ix, iy = cell_ixy(F.col(cell_col))
     base = cover.withColumn(
         cell_col,
         F.when(
@@ -289,8 +267,8 @@ def uncompact_cover(
     )
     return (
         base.withColumn("__d", (F.lit(res).cast("long") - r).cast("int"))
-        .withColumn("__ix", F.expr(f"shiftright({cell_col}, 27) & {m}"))
-        .withColumn("__iy", F.expr(f"{cell_col} & {m}"))
+        .withColumn("__ix", ix)
+        .withColumn("__iy", iy)
         .withColumn(
             "__cix",
             F.explode(
@@ -308,10 +286,7 @@ def uncompact_cover(
             ),
         )
         .select(
-            *prefix,
-            F.expr(
-                f"shiftleft(CAST({res} AS BIGINT), 54) | shiftleft(__cix, 27) | __ciy"
-            ).alias(cell_col),
+            *prefix, cell_pack(res, F.col("__cix"), F.col("__ciy")).alias(cell_col)
         )
     )
 

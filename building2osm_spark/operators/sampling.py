@@ -5,7 +5,7 @@ SAME rows must be selected in any session, under any partitioning, at any
 cluster size, and on re-runs after failure — which rules out
 ``DataFrame.sample`` (seeded per-partition: a repartition changes the
 selection). Both operators here key acceptance off the md5-60bit content
-hash (``operators.dedupe._base60``), which is bit-identical in DuckDB
+hash (``functions.text._base60``), which is bit-identical in DuckDB
 (``CAST('0x'||substring(md5(x),1,15) AS UBIGINT)``), so both have exact
 cross-engine SQL oracles.
 
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedupe import _base60
+from ..functions.text import _base60
 
 #: acceptance-space modulus — fraction resolution 1e-6
 SAMPLE_MOD = 1_000_000

@@ -50,7 +50,7 @@ def builders(spark):
         return assign_points_to_polygons(
             B.points_table(spark, 16_000_000).withColumnRenamed("point_id", "image_id"),
             subs.select(F.col("name").alias("poly_id"), "geometry"),
-            multipolygon=True, broadcast=True, refine="native",
+            multipolygon=True, broadcast=True,
         )
 
     def building_assign_500k():
@@ -134,7 +134,7 @@ def builders(spark):
         return assign_points_to_polygons(
             located.select("image_id", "lon", "lat"),
             subs.select(F.col("name").alias("poly_id"), "geometry"),
-            multipolygon=True, broadcast=True, refine="native",
+            multipolygon=True, broadcast=True,
         )
 
     def ngram_dup_500k():

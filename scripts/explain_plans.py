@@ -67,12 +67,12 @@ def main() -> None:
         ).minhash_signatures(
             spark.read.parquet(f"{SF}/documents.parquet")
         ),
-        "MAP-ONLY: Scan -> Project (shingle-base arrays, native) ->\n"
-        "ArrowEvalPython/MapInArrow (64 numpy reduceat min-folds) — no\n"
-        "explode, no aggregation, no exchange. Round 4 default: the Arrow\n"
+        "MAP-ONLY: Scan -> Project (words, bound once) -> Project\n"
+        "(shingle-base arrays, native) -> MapInArrow (64 numpy reduceat\n"
+        "min-folds) — no explode, no aggregation, no exchange. The Arrow\n"
         "kernel computes bit-identical signatures 3x faster than the\n"
-        "native 64 x array_min(transform(...)) Project it replaced\n"
-        "(kernel='native' keeps that all-JVM form; the explode+groupBy\n"
+        "native 64 x array_min(transform(...)) Project it replaced (that\n"
+        "all-JVM form is now only the test reference; the explode+groupBy\n"
         "form rejected in round 2 pays an exchange of 64-column rows).",
     )
     add(

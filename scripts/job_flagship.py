@@ -81,7 +81,6 @@ def main() -> None:
         subs.select(F.col("name").alias("poly_id"), "geometry"),
         multipolygon=True,
         broadcast=True,
-        refine="native",
     )
     n_assigned = assigned.count()  # warm-up (compiles the plan)
     best = float("inf")

@@ -157,17 +157,14 @@ def test_assign_compacted_keep_unassigned(spark, grid_polys, cloud):
     assert _rows(comp) == _rows(plain)
 
 
+# the ids name the refine: 'native' is the Catalyst ray cast
 @pytest.mark.parametrize("broadcast", [True, False])
-@pytest.mark.parametrize(
-    "refine,compact_levels", [("native", 0), ("native", 2), ("arrow", 0)]
-)
-def test_assign_res_lowered_cover_not_lost(
-    spark, broadcast, refine, compact_levels
-):
+@pytest.mark.parametrize("compact_levels", [0, 2], ids=["native-0", "native-2"])
+def test_assign_res_lowered_cover_not_lost(spark, broadcast, compact_levels):
     """A polygon spanning more than max_cells cells at the requested res
     gets its cover silently LOWERED by cover_polygon; the multi-res probe
     must still find its points (single-res probing missed them entirely) —
-    on BOTH the broadcast and shuffled paths, for BOTH refine kernels."""
+    on BOTH the broadcast and shuffled paths."""
     # 1°×1° square at res 18 would be ~70k cells -> cover drops resolution
     ring = [
         [10.0, 59.0], [11.0, 59.0], [11.0, 60.0], [10.0, 60.0], [10.0, 59.0]
@@ -181,17 +178,15 @@ def test_assign_res_lowered_cover_not_lost(
     )
     out = assign_points_to_polygons(
         pts, polys, multipolygon=False, broadcast=broadcast, res=18,
-        refine=refine, compact_levels=compact_levels,
+        compact_levels=compact_levels,
     )
     assert _rows(out) == [(1, "big"), (2, "big")]
 
 
 @pytest.mark.parametrize("broadcast", [True, False])
-@pytest.mark.parametrize(
-    "refine,compact_levels", [("native", 0), ("native", 2), ("arrow", 0)]
-)
+@pytest.mark.parametrize("compact_levels", [0, 2], ids=["native-0", "native-2"])
 def test_assign_mixed_res_multipolygon_no_duplicates(
-    spark, broadcast, refine, compact_levels
+    spark, broadcast, compact_levels
 ):
     """A multipolygon feature whose sub-polygon covers land at DIFFERENT
     effective resolutions (one huge res-lowered square + one tiny square
@@ -214,7 +209,7 @@ def test_assign_mixed_res_multipolygon_no_duplicates(
     )
     out = assign_points_to_polygons(
         pts, polys, multipolygon=True, broadcast=broadcast, res=18,
-        refine=refine, compact_levels=compact_levels,
+        compact_levels=compact_levels,
     )
     rows = [
         (r.point_id, r.poly_id) for r in out.select("point_id", "poly_id").collect()

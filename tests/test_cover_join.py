@@ -33,18 +33,17 @@ def data(spark):
 import pytest as _pytest
 
 
+# the ids name the refine: 'native' is the Catalyst ray cast
 @_pytest.mark.parametrize(
-    "broadcast,refine",
-    [(True, "native"), (False, "native"), (True, "arrow"), (False, "arrow")],
+    "broadcast", [True, False], ids=["True-native", "False-native"]
 )
-def test_assignment_matches_brute_force(spark, data, broadcast, refine):
+def test_assignment_matches_brute_force(spark, data, broadcast):
     images, subs, images_pdf, subs_pdf = data
     got_df = assign_points_to_polygons(
         images.select("image_id", "lon", "lat"),
         subs.select(F.col("name").alias("poly_id"), "geometry"),
         multipolygon=True,
         broadcast=broadcast,
-        refine=refine,
     )
     got = {(r.image_id, r.poly_id) for r in got_df.collect()}
     want = brute_force_assign(images_pdf, subs_pdf)
@@ -76,7 +75,6 @@ def test_native_plan_has_no_python(spark, data):
         images.select("image_id", "lon", "lat"),
         subs.select(F.col("name").alias("poly_id"), "geometry"),
         multipolygon=True,
-        refine="native",
     )
     plan = got_df._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
@@ -124,7 +122,7 @@ def test_polygon_native_building_assignment(spark):
     pts = spark.createDataFrame(images_pdf[["image_id", "lon", "lat"]])
 
     got_df = assign_points_to_polygons(
-        pts, polys, multipolygon=False, broadcast=True, refine="native", res=18
+        pts, polys, multipolygon=False, broadcast=True, res=18
     )
     got = {(r.image_id, r.poly_id) for r in got_df.collect()}
 

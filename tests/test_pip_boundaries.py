@@ -57,15 +57,12 @@ def test_all_tiers_agree_with_kernel(spark):
         [("poly", [[OUTER, HOLE]])],
         schema="poly_id string, geometry array<array<array<array<double>>>>",
     )
-    for refine in ("native", "arrow"):
-        got_df = assign_points_to_polygons(
-            pts_df, polys, multipolygon=True, broadcast=True, refine=refine, res=15
-        )
-        inside_ids = {r.pid for r in got_df.collect()}
-        got = np.array([i in inside_ids for i in range(len(pts))])
-        assert np.array_equal(got, want), (
-            f"{refine}: {np.nonzero(got != want)[0].tolist()}"
-        )
+    got_df = assign_points_to_polygons(
+        pts_df, polys, multipolygon=True, broadcast=True, res=15
+    )
+    inside_ids = {r.pid for r in got_df.collect()}
+    got = np.array([i in inside_ids for i in range(len(pts))])
+    assert np.array_equal(got, want), np.nonzero(got != want)[0].tolist()
 
     got_df = assign_points_unrolled(
         pts_df, [("poly", [[OUTER, HOLE]])], multipolygon=True
@@ -89,7 +86,7 @@ def test_shuffle_tier_agrees_too(spark):
         schema="poly_id string, geometry array<array<array<array<double>>>>",
     )
     got_df = assign_points_to_polygons(
-        pts_df, polys, multipolygon=True, broadcast=False, refine="native", res=15
+        pts_df, polys, multipolygon=True, broadcast=False, res=15
     )
     inside_ids = {r.pid for r in got_df.collect()}
     got = np.array([i in inside_ids for i in range(len(pts))])

@@ -91,11 +91,56 @@ def test_incremental_lsh_pairs(spark, docs, final_plan):
     assert {(r.new_id, r.old_id) for r in plain.collect()} == got
 
 
+def _minhash_reference(df, base_hash, n_hashes=64, shingle_k=3, seed=42):
+    """The all-JVM MinHash form the Arrow kernel replaced: n_hashes
+    array_min(transform(...)) folds over the front end's JVM-folded base
+    arrays. Kept here as the reference the engine must match bit for bit."""
+    a, b = D._hash_params(n_hashes, seed)
+    mins = ", ".join(
+        f"array_min(transform(__h, x -> (x * {a[i]}L + {b[i]}L) % {D._MERSENNE}))"
+        for i in range(n_hashes)
+    )
+    return D._doc_hashes(df, "text", "doc_id", shingle_k, base_hash).select(
+        "doc_id", F.expr(f"array({mins})").alias("sig")
+    )
+
+
+def _ngram_profile_reference(df, base_hash, ngram=8, sample_mod=None):
+    """The all-JVM cross-doc n-gram profile the Arrow kernel replaced:
+    explode the per-doc base arrays, global (id, hash) distinct, per-hash
+    doc count joined back, one aggregation per doc."""
+    df = df.filter(F.col("text").isNotNull())
+    grams = D._doc_hashes(df, "text", "doc_id", ngram, base_hash).select(
+        "doc_id", F.explode_outer("__h").alias("__h")
+    )
+    if sample_mod is not None:
+        grams = grams.filter(F.col("__h") % sample_mod == 0)
+    grams = grams.distinct()
+    counts = grams.groupBy("__h").agg(F.count("*").alias("__docs"))
+    profile = (
+        grams.join(counts, "__h")
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_ngrams"),
+            F.sum((F.col("__docs") >= 2).cast("long")).alias("dup_ngrams"),
+        )
+        .withColumn("dup_fraction", F.col("dup_ngrams") / F.col("n_ngrams"))
+    )
+    if sample_mod is not None:
+        profile = (
+            df.select("doc_id")
+            .join(profile, "doc_id", "left")
+            .fillna({"n_ngrams": 0, "dup_ngrams": 0})
+        )
+    return profile
+
+
 def test_minhash_kernel_equivalence(spark, docs):
-    """arrow (default) and native signature kernels are bit-identical —
-    same int64 arithmetic, numpy reduceat vs array_min(transform(...));
-    covers both base hashes (the kernel only sees the bases arrays) and
-    short docs (< k words → whole-doc fold branch)."""
+    """The Arrow signature kernel is bit-identical to the all-JVM
+    reference — same int64 arithmetic, numpy reduceat vs
+    array_min(transform(...)); covers both base hashes (for xxhash64 the
+    kernel's numpy polynomial against the JVM fold) and short docs
+    (< k words → whole-doc fold branch)."""
     short = spark.createDataFrame(
         [("s1", "one"), ("s2", "two words"), ("s3", "exactly three words")],
         schema="doc_id string, text string",
@@ -103,8 +148,8 @@ def test_minhash_kernel_equivalence(spark, docs):
     docs_long = docs.select("doc_id", "text").limit(500)  # bigint ids
     for base_hash in ("md5", "xxhash64"):
         for frame in (docs_long, short):  # covers long + string id types
-            arrow = D.minhash_signatures(frame, base_hash=base_hash, kernel="arrow")
-            native = D.minhash_signatures(frame, base_hash=base_hash, kernel="native")
+            arrow = D.minhash_signatures(frame, base_hash=base_hash)
+            native = _minhash_reference(frame, base_hash)
             diff = (
                 arrow.alias("a")
                 .join(native.alias("n"), "doc_id", "full")
@@ -116,8 +161,6 @@ def test_minhash_kernel_equivalence(spark, docs):
                 .count()
             )
             assert diff == 0, (base_hash, frame.columns)
-    with pytest.raises(ValueError):
-        D.minhash_signatures(docs_long, kernel="bogus")
 
 
 def test_exact_jaccard_verification(spark, docs):
@@ -216,13 +259,6 @@ def test_winnow_fingerprints_match_bruteforce(spark):
     for r in D.winnow_fingerprints(df, ngram=ngram, window=w).collect():
         got.setdefault(r["doc_id"], set()).add(r["__h"])
     assert got == {i: brute(t) for i, t in enumerate(texts)}
-
-    # the Arrow sliding_window_view kernel (checkpoint-free variant) must
-    # select the identical fingerprint value sets
-    got_arrow = {}
-    for r in D.winnow_fingerprints(df, ngram=ngram, window=w, kernel="arrow").collect():
-        got_arrow.setdefault(r["doc_id"], set()).add(r["__h"])
-    assert got_arrow == got
 
 
 def test_winnow_coverage_guarantee(spark):
@@ -853,20 +889,42 @@ def test_ivf_prebuilt_index_matches_inline(spark):
 
 def test_minhash_signature_plan_is_map_only(spark, docs):
     """Scale contract: the signature computation never shuffles or
-    aggregates, for BOTH kernels. The arrow default is Scan -> Project
-    (bases) -> one MapInArrow node; the native form is one Project over
-    the scan with no Python/Arrow eval node at all."""
+    aggregates: Scan -> Project (bases) -> one MapInArrow node."""
     base = docs.select("doc_id", "text")
     arrow = D.minhash_signatures(base, base_hash="xxhash64")
     plan = arrow._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "HashAggregate" not in plan
     assert plan.count("MapInArrow") == 1  # exactly one kernel boundary
-    native = D.minhash_signatures(base, base_hash="xxhash64", kernel="native")
-    plan = native._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "HashAggregate" not in plan
-    assert "Python" not in plan and "Arrow" not in plan  # all-JVM hot path
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every `lambdafunction(...)` body of a plan string (balanced
+    parentheses; nested lambdas appear inside their parent's body)."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start != -1:
+        i = j = start + len("lambdafunction(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[i:j - 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_shingle_words_bound_once(spark):
+    """The md5 shingle front end projects split(lower(text)) as a column
+    once: no lambda of the optimized plan re-evaluates it per shingle,
+    which cost O(words²) per document. Reads plans only (no Spark job)."""
+    df = spark.createDataFrame([(1, "a b c d e f g h i")], "doc_id long, text string")
+    for out in (D.minhash_signatures(df), D.cross_doc_ngram_profile(df)):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert any("concat_ws" in b for b in bodies), plan  # shingle lambda
+        assert not any("split(" in b or "lower(" in b for b in bodies), plan
+        assert plan.count("split(lower(") == 1, plan
 
 
 def test_simhash_plan_is_map_only(spark, docs):
@@ -985,42 +1043,37 @@ def test_intra_doc_repetition(spark):
 
 @pytest.mark.parametrize("base_hash", ["md5", "xxhash64"])
 def test_ngram_profile_kernel_equivalence(spark, docs, base_hash):
-    """The Arrow per-doc-unique + window-count form (default) must produce
-    the exact same profile as the all-JVM checkpoint+explode+distinct+join
-    form, for both base hashes and under sampling (where the zero-fill
-    left join must also agree)."""
+    """The Arrow per-doc-unique + window-count form must produce the exact
+    same profile as the all-JVM explode+distinct+join reference, for both
+    base hashes and under sampling (where the zero-fill left join must
+    also agree)."""
     d = docs.select("doc_id", "text")
     for mod in (None, 8):
-        a = D.cross_doc_ngram_profile(
-            d, ngram=8, base_hash=base_hash, sample_mod=mod, kernel="arrow"
-        )
-        n = D.cross_doc_ngram_profile(
-            d, ngram=8, base_hash=base_hash, sample_mod=mod, kernel="native"
-        )
+        a = D.cross_doc_ngram_profile(d, ngram=8, base_hash=base_hash, sample_mod=mod)
+        n = _ngram_profile_reference(d, base_hash, sample_mod=mod)
         assert a.exceptAll(n).count() == 0 and n.exceptAll(a).count() == 0
-    with pytest.raises(ValueError):
-        D.cross_doc_ngram_profile(d, kernel="bogus")
 
 
 def test_ngram_profile_duplicate_id_contract(spark):
     """Documented contract: doc_id is the corpus KEY. On a malformed
-    corpus with duplicate id rows the kernels diverge in different wrong
-    directions (native silently merges the duplicates' gram sets via its
-    global distinct; arrow counts each row separately and flags the id
-    as a dup of itself). This test pins the documented behavior so a
-    semantic change is noticed; restoring global-dedup semantics on the
-    arrow path was measured-REJECTED (35-66 s vs 25-28 s native at 500k
-    — see the operator docstring)."""
+    corpus with duplicate id rows the engine and the all-JVM reference
+    diverge in different wrong directions (the reference silently merges
+    the duplicates' gram sets via its global distinct; the engine counts
+    each row separately and flags the id as a dup of itself). This test
+    pins the documented behavior so a semantic change is noticed;
+    restoring global-dedup semantics in the engine was measured-REJECTED
+    (35-66 s vs 25-28 s for the all-JVM form at 500k — see the operator
+    docstring)."""
     base = spark.createDataFrame(
         [(1, "a b c d e f g h i j"), (2, "k l m n o p q r s t")],
         "doc_id long, text string",
     )
     dup = base.unionAll(base)  # malformed: every id appears twice
     a = {r["doc_id"]: r for r in
-         D.cross_doc_ngram_profile(dup, ngram=8, kernel="arrow").collect()}
+         D.cross_doc_ngram_profile(dup, ngram=8).collect()}
     n = {r["doc_id"]: r for r in
-         D.cross_doc_ngram_profile(dup, ngram=8, kernel="native").collect()}
-    # arrow: each row counted -> self-dup; native: merged -> no dup
+         _ngram_profile_reference(dup, "md5").collect()}
+    # engine: each row counted -> self-dup; reference: merged -> no dup
     assert a[1]["dup_fraction"] == 1.0 and a[1]["n_ngrams"] == 6
     assert n[1]["dup_fraction"] == 0.0 and n[1]["n_ngrams"] == 3
 
