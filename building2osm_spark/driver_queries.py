@@ -1831,7 +1831,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # WITH RECURSIVE: the reach closure is exact for any cluster diameter
 # (DuckDB's recursive-CTE UNION dedups rows, so it terminates on the
 # finite node×node domain); cluster id = min reachable id, mirroring
-# dedupe.pair_components
+# components.connected_components
 ORACLE_DEDUP_KEEP_BEST = _dedup_shingle_ctes(" tailword").replace(
     "\nWITH ", "\nWITH RECURSIVE ", 1
 ) + """,
@@ -2977,7 +2977,7 @@ def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     phash-only (phash copy, own caption) — so each modality's edge
     generator contributes clusters the other cannot see. The underlying
     kernels are parity/recall-proven in tests (pigeonhole exact recall,
-    minhash kernel equivalence, pair_components union-find ≡
+    minhash kernel equivalence, connected_components union-find ≡
     propagation); the golden pins the composed output."""
     from .sources.fixtures import _image_rows_pdf, caption_for, textured_pixels_for
 

@@ -51,6 +51,7 @@ from ..functions.columns import (
     map_update_fixed,
 )
 from ..functions.udfs import format1f_udf, format2f_udf, hausdorff_udf
+from .components import connected_components
 
 # cell resolution for the candidate join: cells ≈ 150 m ≫ 2×10 m margin,
 # so a 3×3 block around one centre always covers the other's bbox test
@@ -391,84 +392,6 @@ def _mutual_best(
     )
 
 
-_GREEDY_DRIVER_MAX = 1_000_000  # distinct candidate pairs; ids only, ~60 MB
-
-
-def _pair_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """(osm_id, component) over the bipartite candidate-pair graph —
-    component id = min i_ref reachable. Below _GREEDY_DRIVER_MAX distinct
-    pairs: one collect + union-find (ids only — the candidate graph is
-    sparse, ≈1-3 edges per building). Above: alternating min-label
-    propagation (rounds ≈ component diameter / 2), raising on
-    non-convergence rather than silently splitting a component."""
-    e = pairs.select("osm_id", "i_ref").distinct().persist()
-    n = e.count()
-    if n <= _GREEDY_DRIVER_MAX:
-        rows = e.collect()
-        e.unpersist()
-        parent: dict[object, object] = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in rows:
-            ra, rb = find(("o", r["osm_id"])), find(("i", r["i_ref"]))
-            if ra != rb:
-                parent[rb] = ra
-        comp_min: dict[object, str] = {}
-        for r in rows:
-            root = find(("o", r["osm_id"]))
-            if comp_min.get(root) is None or r["i_ref"] < comp_min[root]:
-                comp_min[root] = r["i_ref"]
-        mapping = sorted(
-            {(r["osm_id"], comp_min[find(("o", r["osm_id"]))]) for r in rows}
-        )
-        return pairs.sparkSession.createDataFrame(
-            mapping, schema="osm_id long, component string"
-        )
-    lab_o = e.groupBy("osm_id").agg(F.min("i_ref").alias("component")).persist()
-    for _ in range(max_iter):
-        lab_i = (
-            e.join(lab_o, "osm_id")
-            .groupBy("i_ref")
-            .agg(F.min("component").alias("component"))
-        )
-        new_o = (
-            e.join(lab_i, "i_ref")
-            .groupBy("osm_id")
-            .agg(F.min("component").alias("component"))
-            .persist()
-        )
-        changed = (
-            new_o.join(lab_o.withColumnRenamed("component", "__old"), "osm_id")
-            .filter(F.col("component") != F.col("__old"))
-            .count()
-        )
-        lab_o.unpersist()
-        lab_o = new_o
-        if changed == 0:
-            # hand back ContextCleaner-managed blocks, not a persist that
-            # would outlive the call in a long-lived session (engine
-            # persist-hygiene convention); cheap — (osm_id, component)
-            # rows read straight from the still-cached lab_o
-            out = lab_o.localCheckpoint(eager=True)
-            lab_o.unpersist()
-            e.unpersist()
-            return out
-    # non-convergence must not leave blocks pinned for the session's life
-    lab_o.unpersist()
-    e.unpersist()
-    raise RuntimeError(
-        f"_pair_components: label propagation did not converge in {max_iter} "
-        "rounds — raise max_iter (component diameter exceeds it)"
-    )
-
-
 def _greedy_grouped(
     osm: DataFrame,
     imports: DataFrame,
@@ -498,8 +421,15 @@ def _greedy_grouped(
     else:
         scored = scored.withColumn("__i_ord", F.col("i_ref"))
     scored = scored.localCheckpoint(eager=False)
-    comp = _pair_components(scored)
-    return scored.join(comp, "osm_id")
+    # the imports one OSM building meets are connected; component id =
+    # min i_ref reachable over the bipartite candidate graph
+    comp, _ = connected_components(
+        scored.groupBy("osm_id").agg(F.collect_set("i_ref")).drop("osm_id")
+    )
+    return scored.join(
+        comp.select(F.col("node").alias("i_ref"), F.col("cluster").alias("component")),
+        "i_ref",
+    )
 
 
 def conflate_greedy(

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import _base60
+from .components import connected_components
 
 # 31-bit Mersenne prime: universal-hash products stay < 2^62 (no int64
 # overflow under Spark's default ANSI arithmetic)
@@ -1101,113 +1102,6 @@ def intra_doc_repetition(
     )
 
 
-_CLUSTER_DRIVER_MAX = 1_000_000
-
-
-def pair_components(
-    pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b", max_iter: int = 20
-) -> DataFrame:
-    """(node, cluster) over an undirected id-pair graph; cluster id =
-    smallest member id.
-
-    Two physical strategies, same result (the connected_components /
-    _pair_components precedent): below _CLUSTER_DRIVER_MAX distinct pairs
-    the edge list collects to the driver for a union-find (one job, no
-    iterative shuffles — the right physical plan for bounded pair lists,
-    where per-round join+agg latency dominates); above it, distributed
-    alternating min-label propagation (ids only — no payloads ride the
-    iteration; rounds ≈ cluster diameter, and near-dup clusters are
-    shallow star-ish graphs) that RAISES on non-convergence rather than
-    silently splitting a cluster. The 10^12-doc path is the distributed
-    one — only ids shuffle, never text."""
-    e = (
-        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .persist()
-    )
-    node_t = pairs.schema[a_col].dataType.simpleString()
-    n = e.count()
-    if n <= _CLUSTER_DRIVER_MAX:
-        rows = e.collect()
-        e.unpersist()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in rows:
-            ra, rb = find(r["a"]), find(r["b"])
-            if ra != rb:
-                parent[rb] = ra
-        comp_min: dict = {}
-        nodes = {r["a"] for r in rows} | {r["b"] for r in rows}
-        for v in nodes:
-            root = find(v)
-            if comp_min.get(root) is None or v < comp_min[root]:
-                comp_min[root] = v
-        mapping = sorted((v, comp_min[find(v)]) for v in nodes)
-        return pairs.sparkSession.createDataFrame(
-            mapping, schema=f"node {node_t}, cluster {node_t}"
-        )
-    edges = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .localCheckpoint(eager=False)
-    )
-    e.unpersist()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("cluster", F.col("node"))
-        .persist()
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("cluster").alias("__nc"))
-        )
-        new_labels = (
-            labels.join(nbr, labels["node"] == nbr["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("__nc"), F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .persist()
-        )
-        changed = (
-            labels.alias("o")
-            .join(new_labels.alias("nw"), "node")
-            .filter(F.col("o.cluster") != F.col("nw.cluster"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        labels.unpersist()
-        raise RuntimeError(
-            f"pair_components: min-label propagation did not converge in "
-            f"{max_iter} rounds (cluster diameter > ~{2 * max_iter}); "
-            f"re-run with a larger max_iter"
-        )
-    out = labels.localCheckpoint(eager=False)
-    labels.unpersist()
-    return out
-
-
 def dedup_keep_best(
     docs: DataFrame,
     pairs: DataFrame,
@@ -1226,7 +1120,9 @@ def dedup_keep_best(
     `cluster_size`. The rank and size windows share one partitioning, so
     selection costs a single cluster-key shuffle after the id-only
     component iteration."""
-    comp = pair_components(pairs, a_col=a_col, b_col=b_col, max_iter=max_iter)
+    comp, _ = connected_components(
+        pairs.select(F.array(a_col, b_col)), max_iter=max_iter
+    )
     clustered = (
         docs.join(comp, docs[id_col] == comp["node"], "left")
         .drop("node")

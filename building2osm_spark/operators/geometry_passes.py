@@ -1,28 +1,25 @@
 """Distributed rectify + simplify over DataFrames (SURVEY.md G1/G2, J10).
 
-Spark shape of the passes whose pure kernels live in geopasses.py:
+Spark shape of the passes whose pure kernels live in geopasses.py, fused
+into one kernel per connected component of the shared-vertex graph:
 
-  stage 1  connected components over shared vertices — iterative label
-           propagation (the one genuinely graph-shaped op, J10): labels
-           converge in O(diameter) rounds and building clusters are tiny,
-           so 2-4 rounds suffice; each round is two hash aggregations;
-  stage 2  groupBy(component).applyInPandas(rectify kernel) — each group
-           enters the kernel exactly once (the reference's 'rectified'
-           memo X5 is free in dataflow form);
-  stage 3  simplify census: explode all post-rectify vertices (closing
-           duplicate INCLUDED — reference quirk, building2osm.py:786-792)
-           → groupBy(vertex).count();
-  stage 4  per-building decrement marks (Arrow kernel) for non-rectified
-           buildings → groupBy(vertex).count();
-  stage 5  removable = census − marks == 0, unioned with the rectify
-           pass's dropped straight-line nodes; physical removal by joining
-           each building's own removable subset back (vertex-keyed then
-           ref-keyed shuffles — never a driver-side set at scale).
+  census   explode every ring's vertices (closing duplicate excluded) →
+           groupBy(vertex).collect_set(ref); the sets with more than one
+           ref are the graph's hyperedges — one shuffle;
+  split    buildings in no shared set (the vast majority) run the fused
+           kernel map-only, zero shuffles;
+  groups   the rest get their component from operators.components (a
+           driver union-find over the collected census below its
+           threshold, distributed min-label propagation above it), one
+           repartition by component, then the fused kernel per component.
 
-The reference's shared mutable dicts (`nodes`, `remove_nodes`,
-building2osm.py:779-794,870-896) become DataFrames; semantics are
-identical (verified against geopasses.apply_passes, which is itself
-parity-tested against the reference).
+The fused kernel rectifies the component (geopasses.rectify_group), then
+runs simplify's vertex-use census, decrement marks and removal on the
+component alone: the reference's shared mutable dicts (`nodes`,
+`remove_nodes`, building2osm.py:779-794,870-896) decompose exactly per
+component, because a coordinate shared by two buildings puts them in the
+same component. Semantics are identical to geopasses.apply_passes, which
+is itself parity-tested against the reference.
 """
 
 from __future__ import annotations
@@ -33,27 +30,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import geopasses as GP
+from .components import connected_components
+
 
 def _to_rings(geometry) -> list[list[tuple[float, float]]]:
     return [[(p[0], p[1]) for p in ring] for ring in geometry]
 
 
-def _explode_vertices(df: DataFrame, include_closing: bool) -> DataFrame:
-    """(ref, vlon, vlat) one row per vertex occurrence of every ring."""
+def _shared_vertex_sets(df: DataFrame) -> DataFrame:
+    """(__refs) one row per vertex that more than one building uses: the
+    ref set of every shared vertex (closing duplicates excluded), i.e.
+    the hyperedges of the shared-vertex graph. One shuffle."""
     ring = F.explode("geometry").alias("ring")
-    rings = df.select("ref", ring)
-    verts = rings.select(
-        "ref",
-        F.explode(
-            F.col("ring") if include_closing else F.slice("ring", 1, F.size("ring") - 1)
-        ).alias("v"),
+    verts = df.select("ref", ring).select(
+        "ref", F.explode(F.slice("ring", 1, F.size("ring") - 1)).alias("v")
     )
-    return verts.select(
-        "ref", F.col("v")[0].alias("vlon"), F.col("v")[1].alias("vlat")
+    return (
+        verts.select("ref", F.col("v")[0].alias("vlon"), F.col("v")[1].alias("vlat"))
+        .groupBy("vlon", "vlat")
+        .agg(F.collect_set("ref").alias("__refs"))
+        .filter(F.size("__refs") > 1)
+        .select("__refs")
     )
 
-
-_CC_DRIVER_MAX = 1_000_000  # vertex rows; ~50 MB collected
 
 # Rows per task for the grouped Python-kernel repartition. The kernel is
 # compute-bound (~1 ms/building of pure-Python parity kernel), not
@@ -72,253 +71,8 @@ def _kernel_partitions(spark, n_rows: int) -> int:
     return max(1, min(shuffle_n, n_rows // _KERNEL_ROWS_PER_TASK + 1))
 
 
-def connected_components(df: DataFrame, max_iter: int = 20) -> DataFrame:
-    """(ref, component) via shared-vertex connectivity.
-    Component id = lexicographically smallest member ref.
-
-    Two physical strategies, same result: below _CC_DRIVER_MAX distinct
-    (ref, vertex) rows the graph collects to the driver for a union-find
-    (one job, no iterative shuffles — shared-vertex subsets are a few
-    percent of a municipality, and label propagation's per-round
-    join+agg+count latency dominates at that size); above it, distributed
-    min-label propagation (rounds ≈ component diameter, AQE-coalesced).
-    """
-    verts = _explode_vertices(df, include_closing=False).distinct().persist()
-    n_rows = verts.count()
-    if n_rows <= _CC_DRIVER_MAX:
-        rows = verts.collect()
-        verts.unpersist()
-        parent: dict[object, object] = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        def union(a, b):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-
-        for r in rows:
-            union(("r", r["ref"]), ("v", r["vlon"], r["vlat"]))
-        comp_min: dict[object, str] = {}
-        refs = {r["ref"] for r in rows}
-        for ref in refs:
-            root = find(("r", ref))
-            if comp_min.get(root) is None or ref < comp_min[root]:
-                comp_min[root] = ref
-        mapping = [(ref, comp_min[find(("r", ref))]) for ref in sorted(refs)]
-        return df.sparkSession.createDataFrame(
-            mapping, schema="ref string, component string"
-        )
-    labels = df.select("ref").withColumn("component", F.col("ref")).persist()
-    converged = False
-    for _ in range(max_iter):
-        vertex_label = (
-            verts.join(labels, "ref")
-            .groupBy("vlon", "vlat")
-            .agg(F.min("component").alias("vlabel"))
-        )
-        # persist each generation: the convergence check and the next
-        # round both read it; without this, lineage re-executes all
-        # previous rounds per action
-        new_labels = (
-            verts.join(vertex_label, ["vlon", "vlat"])
-            .groupBy("ref")
-            .agg(F.min("vlabel").alias("component"))
-        ).persist()
-        changed = (
-            labels.alias("a")
-            .join(new_labels.alias("b"), "ref")
-            .filter(F.col("a.component") != F.col("b.component"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    verts.unpersist()
-    if not converged:
-        # an unconverged result SPLITS physical components (the min label
-        # has only walked max_iter ref→vertex→ref hops) — rectify would
-        # then run on partial groups and silently diverge from the
-        # reference; a long terrace chain legitimately needs more rounds
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components: min-label propagation did not converge "
-            f"in {max_iter} rounds (component diameter > ~{2 * max_iter}); "
-            f"re-run with a larger max_iter"
-        )
-    # hand back materialized blocks (ContextCleaner-managed), not a
-    # CacheManager entry the caller would have to remember to release
-    out = labels.localCheckpoint(eager=True)
-    labels.unpersist()
-    return out
-
-
 GEOM_T = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
-_RECTIFY_SCHEMA = T.StructType(
-    [
-        T.StructField("ref", T.StringType()),
-        T.StructField("geometry", GEOM_T),
-        T.StructField("rectified", T.StringType()),
-        T.StructField("removed", GEOM_T),  # [ [ [lon,lat], ...] ] one pseudo-ring
-        T.StructField("relocated", T.DoubleType()),  # max node move, m
-        T.StructField("reason", T.StringType()),     # DEBUG_NORECTIFY wording
-    ]
-)
-
-
-def _grouped_rectify_mapper(batches):
-    """Run _rectify_kernel per component over component-sorted partitions.
-
-    applyInPandas with many tiny groups pays ~ms of Arrow/pandas overhead
-    PER GROUP (measured 23 s for 25k buildings in 5k terrace components);
-    here each Arrow batch is ONE pandas frame and components group inside
-    it. A component can straddle two batches of the same partition
-    (sortWithinPartitions makes it contiguous), so the trailing component
-    of every batch is carried into the next and flushed at the end."""
-    carry = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        last = pdf["component"].iloc[-1]
-        tail_mask = pdf["component"] == last
-        carry = pdf[tail_mask]
-        body = pdf[~tail_mask]
-        if len(body):
-            yield pd.concat(
-                [_rectify_kernel(sub) for _, sub in body.groupby("component", sort=False)],
-                ignore_index=True,
-            )
-    if carry is not None and len(carry):
-        yield pd.concat(
-            [_rectify_kernel(sub) for _, sub in carry.groupby("component", sort=False)],
-            ignore_index=True,
-        )
-
-
-def _rectify_components(
-    grouped_with_comp: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
-    """(…, component) → rectified rows; component-clustered mapInPandas.
-
-    num_partitions sizes the component shuffle for the compute-bound
-    kernel (see _KERNEL_ROWS_PER_TASK); when the caller does not know the
-    row count, fall back to the session's shuffle parallelism — NOT an
-    AQE-coalescible keyless repartition, which sizes by bytes and
-    serializes the Python kernel onto 1-2 cores for compact geometry."""
-    if num_partitions is None:
-        num_partitions = int(
-            grouped_with_comp.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    return (
-        grouped_with_comp.repartition(num_partitions, "component")
-        .sortWithinPartitions("component", "ref")
-        .mapInPandas(_grouped_rectify_mapper, schema=_RECTIFY_SCHEMA)
-    )
-
-
-def _rectify_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("ref")  # canonical insertion order (SURVEY.md O1/O4)
-    buildings = [ _to_rings(g) for g in pdf["geometry"] ]
-    res = GP.rectify_group(buildings)
-    removed = [[list(n) for n in sorted(res.removed_nodes)]]
-    rows = {
-        "ref": list(pdf["ref"]),
-        "geometry": [
-            [[list(p) for p in ring] for ring in rings] for rings in res.buildings
-        ],
-        "rectified": [res.status] * len(buildings),
-        "removed": [removed] + [[[]]] * (len(buildings) - 1),
-        "relocated": [res.relocated] * len(buildings),
-        "reason": [res.reason] * len(buildings),
-    }
-    return pd.DataFrame(rows)
-
-
-def _rectify_singles_kernel(batches):
-    for pdf in batches:
-        out = {"ref": [], "geometry": [], "rectified": [], "removed": [],
-               "relocated": [], "reason": []}
-        for ref, g in zip(pdf["ref"], pdf["geometry"]):
-            res = GP.rectify_group([_to_rings(g)])
-            out["ref"].append(ref)
-            out["geometry"].append(
-                [[list(p) for p in ring] for ring in res.buildings[0]]
-            )
-            out["rectified"].append(res.status)
-            out["removed"].append([[list(n) for n in sorted(res.removed_nodes)]])
-            out["relocated"].append(res.relocated)
-            out["reason"].append(res.reason)
-        yield pd.DataFrame(out)
-
-
-def rectify(df: DataFrame) -> DataFrame:
-    """(ref, geometry, rectified, removed) after group orthogonalization.
-
-    Split plan: buildings sharing NO vertex with another building (the vast
-    majority) are singleton components — they rectify in a map-only
-    mapInPandas pass with no shuffle; only buildings with shared vertices
-    enter label propagation + the grouped kernel. Same kernels, same
-    results (the group census of a singleton is its own vertices)."""
-    verts = _explode_vertices(df, include_closing=False)
-    # single-pass census: collect the ref set per vertex, explode the >1
-    # sets — no second pass over the exploded vertices
-    shared_refs = (
-        verts.groupBy("vlon", "vlat")
-        .agg(F.collect_set("ref").alias("__refs"))
-        .filter(F.size("__refs") > 1)
-        .select(F.explode("__refs").alias("ref"))
-        .distinct()
-    )
-    singles = df.join(shared_refs, "ref", "left_anti")
-    grouped = df.join(shared_refs, "ref", "left_semi")
-
-    singles_out = singles.select("ref", "geometry").mapInPandas(
-        _rectify_singles_kernel, schema=_RECTIFY_SCHEMA
-    )
-    comps = connected_components(grouped)
-    # comps is materialized (driver-built or localCheckpointed), so the
-    # count is free — it sizes the kernel shuffle by rows, not bytes
-    grouped_out = _rectify_components(
-        grouped.join(comps, "ref"),
-        num_partitions=_kernel_partitions(df.sparkSession, comps.count()),
-    )
-    return singles_out.unionByName(grouped_out)
-
-
-_MARKS_SCHEMA = T.StructType(
-    [
-        T.StructField("vlon", T.DoubleType()),
-        T.StructField("vlat", T.DoubleType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def _marks_kernel(batches):
-    for pdf in batches:
-        out: dict[tuple[float, float], int] = {}
-        for g in pdf["geometry"]:
-            for node in GP.simplify_marks(_to_rings(g)):
-                out[node] = out.get(node, 0) + 1
-        if out:
-            yield pd.DataFrame(
-                {
-                    "vlon": [k[0] for k in out],
-                    "vlat": [k[1] for k in out],
-                    "n": list(out.values()),
-                }
-            )
-
-
-_REMOVE_SCHEMA = T.StructType(
+_OUT_SCHEMA = T.StructType(
     [
         T.StructField("ref", T.StringType()),
         T.StructField("geometry", GEOM_T),
@@ -330,81 +84,6 @@ _REMOVE_SCHEMA = T.StructType(
 )
 
 
-def simplify(rectified_df: DataFrame) -> DataFrame:
-    """Apply the simplify pass to the rectify output."""
-    # the rectify output feeds five consumers below (census, marks, the
-    # rectify-removed set, the per-building removable join, and the final
-    # removal kernel) — persist it or the grouped rectify kernels re-run
-    # once per consumer
-    rectified_df = rectified_df.persist()
-    census = (
-        _explode_vertices(rectified_df, include_closing=True)
-        .groupBy("vlon", "vlat")
-        .agg(F.count("*").alias("uses"))
-    )
-    marks = (
-        rectified_df.filter(F.col("rectified") != "done")
-        .select("geometry")
-        .mapInPandas(_marks_kernel, schema=_MARKS_SCHEMA)
-        .groupBy("vlon", "vlat")
-        .agg(F.sum("n").alias("marked"))
-    )
-    removable_from_census = (
-        census.join(marks, ["vlon", "vlat"])
-        .filter(F.col("uses") - F.col("marked") == 0)
-        .select("vlon", "vlat")
-    )
-    removable_from_rectify = (
-        rectified_df.select(F.explode("removed").alias("ring"))
-        .select(F.explode("ring").alias("v"))
-        .select(F.col("v")[0].alias("vlon"), F.col("v")[1].alias("vlat"))
-        .filter(F.col("vlon").isNotNull())
-    )
-    removable = removable_from_census.unionByName(removable_from_rectify).distinct()
-
-    # each building's own removable subset, joined back by ref
-    own = (
-        _explode_vertices(rectified_df, include_closing=False)
-        .join(removable, ["vlon", "vlat"])
-        .groupBy("ref")
-        .agg(F.collect_set(F.array("vlon", "vlat")).alias("to_remove"))
-    )
-    with_removals = rectified_df.join(own, "ref", "left")
-
-    def remove_kernel(batches):
-        for pdf in batches:
-            geoms, counts = [], []
-            for g, rem in zip(pdf["geometry"], pdf["to_remove"]):
-                rings = _to_rings(g)
-                rem_set = (
-                    {(p[0], p[1]) for p in rem} if rem is not None and len(rem) else set()
-                )
-                new_rings, n = GP.remove_marked(rings, rem_set)
-                geoms.append([[list(p) for p in ring] for ring in new_rings])
-                counts.append(n)
-            yield pd.DataFrame(
-                {
-                    "ref": pdf["ref"],
-                    "geometry": geoms,
-                    "rectified": pdf["rectified"],
-                    "n_removed": counts,
-                    "relocated": pdf["relocated"],
-                    "reason": pdf["reason"],
-                }
-            )
-
-    out = with_removals.select(
-        "ref", "geometry", "rectified", "to_remove", "relocated", "reason"
-    ).mapInPandas(remove_kernel, schema=_REMOVE_SCHEMA)
-    # release the rectify cache deterministically: materialize the final
-    # (slim, one-row-per-building) output into ContextCleaner-managed
-    # blocks, then drop the CacheManager entry — long-lived sessions
-    # accumulate nothing across repeated pipeline runs
-    out = out.localCheckpoint(eager=True)
-    rectified_df.unpersist()
-    return out
-
-
 def _fused_component(buildings: list) -> tuple:
     """Fused rectify+simplify for ONE connected component.
 
@@ -413,20 +92,20 @@ def _fused_component(buildings: list) -> tuple:
     construction, and non-rectified buildings — the only mark sources —
     keep their original coordinates), so the global simplify state —
     vertex-use census, simplify marks, rectify-removed nodes — decomposes
-    exactly per component. Same GP kernels as the staged path; outputs
-    tuple-identical (parity-asserted in test_geometry_passes_spark).
+    exactly per component. Outputs equal geopasses.apply_passes'
+    (parity-asserted in test_geometry_passes_spark).
 
     Returns (geoms, status, n_removed_list, relocated, reason)."""
     res = GP.rectify_group(buildings)
     # census: vertex occurrence counts across the whole component
-    # INCLUDING the closing node (mirrors _explode_vertices(True))
+    # INCLUDING the closing node (reference quirk, building2osm.py:786-792)
     uses: dict[tuple, int] = {}
     for rings in res.buildings:
         for ring in rings:
             for node in ring:
                 uses[node] = uses.get(node, 0) + 1
-    # marks only from non-rectified buildings (simplify() filters
-    # rectified != 'done'); rectify status is group-level
+    # marks only from non-rectified buildings; rectify status is
+    # group-level
     marked: dict[tuple, int] = {}
     if res.status != "done":
         for rings in res.buildings:
@@ -479,9 +158,15 @@ def _fused_group_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _grouped_fused_mapper(batches):
-    """Component-clustered fused rectify+simplify (same carry-buffer shape
-    as _grouped_rectify_mapper — see its docstring for why not
-    applyInPandas)."""
+    """Run _fused_group_kernel per component over component-sorted
+    partitions.
+
+    applyInPandas with many tiny groups pays ~ms of Arrow/pandas overhead
+    PER GROUP (measured 23 s for 25k buildings in 5k terrace components);
+    here each Arrow batch is ONE pandas frame and components group inside
+    it. A component can straddle two batches of the same partition
+    (sortWithinPartitions makes it contiguous), so the trailing component
+    of every batch is carried into the next and flushed at the end."""
     carry = None
     for pdf in batches:
         if carry is not None and len(carry):
@@ -504,91 +189,34 @@ def _grouped_fused_mapper(batches):
 
 def rectify_and_simplify(df: DataFrame) -> DataFrame:
     """Full pass pipeline: df(ref, geometry) → (ref, geometry, rectified,
-    n_removed). Equivalent to process_municipality's rectify+simplify
-    sequence (building2osm.py:1360-1361).
+    n_removed, relocated, reason). Equivalent to process_municipality's
+    rectify+simplify sequence (building2osm.py:1360-1361).
 
-    Plan shape: the singleton majority (no shared vertices) runs the FUSED
-    map-only kernel — scan → mapInPandas, zero shuffles, no census joins —
-    while only the shared-vertex minority takes the global path (label
-    propagation + group kernels + cross-building census). The split itself
-    is one vertex-census shuffle. At 100k fixture buildings this is ~4×
-    the unified path's throughput; results are identical.
+    Plan shape: the singleton majority (no shared vertices) runs the fused
+    map-only kernel — scan → mapInPandas, zero shuffles, no census joins;
+    the shared-vertex minority runs the same fused kernel once per
+    connected component (see _fused_component for why the simplify state
+    is component-local): components → one repartition by component →
+    fused kernel. The split itself is one vertex-census shuffle.
 
-    The shared-vertex minority runs the SAME fused kernel per connected
-    component (vertex coordinates cannot cross component boundaries, so
-    the census/marks/removal state is component-local — the identical
-    argument that justifies the singleton fast path): components →
-    one repartition by component → fused kernel. The staged
-    rectify()/simplify() pair remains as the composable API surface.
-
-    Component derivation reuses the split census: every shared vertex's
-    ref-set IS a hyperedge of the connectivity graph, so below
-    _CC_DRIVER_MAX shared vertices a driver union-find over the collected
-    ref-sets yields the components with zero extra shuffles (the census
-    aggregation already ran); above it, the distributed label-propagation
-    path (connected_components) takes over."""
-    verts = _explode_vertices(df, include_closing=False)
-    # single-pass census: collect the ref set per vertex, keep only the
-    # >1 sets (the connectivity hyperedges)
-    shared_sets = (
-        verts.groupBy("vlon", "vlat")
-        .agg(F.collect_set("ref").alias("__refs"))
-        .filter(F.size("__refs") > 1)
-        .select("__refs")
-        .persist()
-    )
-    n_edges = shared_sets.count()
+    Components reuse the split census: every shared vertex's ref set IS a
+    hyperedge of the connectivity graph, so connected_components takes
+    the census directly. Below its driver threshold that is the census
+    aggregation's count and one collect of the already-cached sets — no
+    extra shuffle; with no shared vertex at all the whole pass is the
+    map-only kernel."""
     spark = df.sparkSession
-    if n_edges == 0:
-        shared_sets.unpersist()
+    comps, n_grouped = connected_components(_shared_vertex_sets(df))
+    if n_grouped == 0:
         return df.select("ref", "geometry").mapInPandas(
-            _rectify_simplify_singles_kernel, schema=_REMOVE_SCHEMA
+            _rectify_simplify_singles_kernel, schema=_OUT_SCHEMA
         )
-    if n_edges <= _CC_DRIVER_MAX:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        seen: set[str] = set()
-        for row in shared_sets.collect():
-            refs = row["__refs"]
-            seen.update(refs)
-            r0 = find(refs[0])
-            for ref in refs[1:]:
-                r1 = find(ref)
-                if r0 != r1:
-                    # keep the lexicographically smaller root so the
-                    # component id is the min member ref (CC contract)
-                    if r1 < r0:
-                        r0, r1 = r1, r0
-                    parent[r1] = r0
-        shared_sets.unpersist()
-        n_grouped = len(seen)
-        comps = F.broadcast(
-            spark.createDataFrame(
-                [(ref, find(ref)) for ref in sorted(seen)],
-                schema="ref string, component string",
-            )
-        )
-    else:
-        shared_refs = shared_sets.select(
-            F.explode("__refs").alias("ref")
-        ).distinct()
-        comps = connected_components(df.join(shared_refs, "ref", "left_semi"))
-        n_grouped = comps.count()  # materialized — free
-        shared_sets.unpersist()
-
+    comps = comps.select(F.col("node").alias("ref"), F.col("cluster").alias("component"))
     singles = df.join(comps, "ref", "left_anti")
     grouped = df.join(comps, "ref")
 
     singles_out = singles.select("ref", "geometry").mapInPandas(
-        _rectify_simplify_singles_kernel, schema=_REMOVE_SCHEMA
+        _rectify_simplify_singles_kernel, schema=_OUT_SCHEMA
     )
     grouped_out = (
         grouped.select("ref", "geometry", "component")
@@ -596,6 +224,6 @@ def rectify_and_simplify(df: DataFrame) -> DataFrame:
         # one task, a 100k run keeps full kernel parallelism
         .repartition(_kernel_partitions(spark, n_grouped), "component")
         .sortWithinPartitions("component", "ref")
-        .mapInPandas(_grouped_fused_mapper, schema=_REMOVE_SCHEMA)
+        .mapInPandas(_grouped_fused_mapper, schema=_OUT_SCHEMA)
     )
     return singles_out.unionByName(grouped_out)

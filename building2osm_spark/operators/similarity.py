@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .components import connected_components
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -267,8 +269,6 @@ def semantic_dedup(
     sem_cluster is the seed index and dup_size the size of the dup group
     the survivor represents (1 = no near-duplicate found).
     """
-    from .dedupe import pair_components
-
     if seeds is None:
         rows = (
             df.select(id_col, vec_col).orderBy(id_col).limit(n_seeds).collect()
@@ -301,7 +301,9 @@ def semantic_dedup(
         .filter(F.col("__cos") >= threshold)
         .select("id_a", "id_b")
     )
-    comp = pair_components(pairs, max_iter=max_iter)
+    comp, _ = connected_components(
+        pairs.select(F.array("id_a", "id_b")), max_iter=max_iter
+    )
     clustered = (
         assigned.select(id_col, "sem_cluster")
         .join(comp, F.col(id_col) == F.col("node"), "left")

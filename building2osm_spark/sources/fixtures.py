@@ -59,13 +59,15 @@ def fnv1a64_batch(ids: np.ndarray) -> np.ndarray:
     (round 6: the per-row form is a per-BYTE Python loop; at 500k rows
     with_location spent ~11 task-s in it). Ids are widened to a
     fixed-width byte matrix (NUL-padded); the fold runs as max_len
-    vectorized passes masked on the padding. NUL bytes cannot occur in
-    UTF-8-encoded ids (only U+0000 encodes to 0x00, never present in
-    the engine's id spaces), asserted against the scalar form in
-    tests/test_fixture_hash_batch.py."""
+    vectorized passes masked on the padding, so an id holding U+0000
+    (the only code point whose UTF-8 form has a 0x00 byte) would hash
+    like its NUL-free prefix: such ids raise ValueError instead.
+    Asserted against the scalar form in tests/test_fixture_hash_batch.py."""
     n = len(ids)
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
+    if "\x00" in "".join(map(str, ids)):
+        raise ValueError("fnv1a64_batch: ids must not contain NUL (U+0000)")
     # fixed-width bytes view; non-ASCII survives via per-element encode
     fixed = np.char.encode(np.asarray(ids, dtype="U"), "utf-8")
     width = fixed.dtype.itemsize

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import itertools
 import sys
 
 import pytest
@@ -29,6 +30,26 @@ def spark():
 
     s = get_spark(app="tests", cores=4, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """Run fn() under a fresh Spark job group; return (result, the number
+    of jobs fn ran — the ones building the result and the ones collecting
+    it). Adds no Spark work of its own."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def _run(fn):
+        group = f"jobs_of_{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return _run
 
 
 @pytest.fixture(scope="session")

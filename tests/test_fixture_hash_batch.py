@@ -5,6 +5,7 @@ in the bench depends on them)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from building2osm_spark.sources.fixtures import (
     fnv1a64,
@@ -28,6 +29,15 @@ def test_fnv1a64_batch_bit_identical():
     want = np.asarray([fnv1a64(i) for i in ids], dtype=np.uint64)
     assert np.array_equal(got, want)
     assert fnv1a64_batch(np.asarray([], dtype=object)).shape == (0,)
+
+
+def test_fnv1a64_batch_rejects_nul():
+    # the fixed-width fold cannot tell "a", "a\x00" and "a\x00b" apart,
+    # while the scalar form gives three different values
+    assert len({int(fnv1a64(s)) for s in ("a", "a\x00", "a\x00b")}) == 3
+    for bad in (["a", "a\x00"], ["a\x00b"], ["\x00"]):
+        with pytest.raises(ValueError, match="NUL"):
+            fnv1a64_batch(np.asarray(bad, dtype=object))
 
 
 def test_image_locations_batch_bit_identical():

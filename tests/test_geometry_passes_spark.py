@@ -6,20 +6,23 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from building2osm_spark import geopasses as GP
+from building2osm_spark.operators.components import connected_components
 from building2osm_spark.operators.geometry_passes import (
-    connected_components,
+    _shared_vertex_sets,
     rectify_and_simplify,
 )
 from building2osm_spark.sources import fixtures as FX
 
 
-def test_spark_passes_equal_pure(spark):
+def test_spark_passes_equal_pure(spark, jobs_of):
     geometries = FX.building_geometries(140)
     df = spark.createDataFrame(
         [(r, g) for r, g in geometries],
         schema=f"ref string, geometry {FX.GEOMETRY_POLYGON_T}",
     )
-    got_rows = rectify_and_simplify(df).collect()
+    got_rows, n_jobs = jobs_of(lambda: rectify_and_simplify(df).collect())
+    # job budget: the census count and collect, then the fused plan
+    assert n_jobs == 9
     got = {
         r["ref"]: ([[tuple(p) for p in ring] for ring in r["geometry"]], r["rectified"])
         for r in got_rows
@@ -41,13 +44,14 @@ def test_connected_components_labels(spark):
         [(r, g) for r, g in geometries],
         schema=f"ref string, geometry {FX.GEOMETRY_POLYGON_T}",
     )
-    comp = connected_components(df)
-    sizes = comp.groupBy("component").count()
+    comp, n = connected_components(_shared_vertex_sets(df))
+    sizes = comp.groupBy("cluster").count()
     pairs = sizes.filter(F.col("count") >= 2).count()
     assert pairs >= 10  # the row-house pairs
-    assert comp.count() == 140
+    # only buildings sharing a vertex are labelled, every one of them
+    assert n == comp.count() < 140
     # component id is the min member ref
-    bad = comp.filter(F.col("component") > F.col("ref")).count()
+    bad = comp.filter(F.col("cluster") > F.col("node")).count()
     assert bad == 0
 
 
@@ -81,9 +85,10 @@ def test_rectify_relocated_and_reason_surface(spark):
 
 
 def test_fused_fallback_label_propagation_equals_driver_path(spark, monkeypatch):
-    """Force the distributed component fallback (as if >_CC_DRIVER_MAX
+    """Force the distributed component fallback (as if >DRIVER_MAX
     shared vertices) and assert it returns exactly the driver-union-find
     path's rows."""
+    from building2osm_spark.operators import components as CC
     from building2osm_spark.operators import geometry_passes as GPS
 
     geometries = FX.building_geometries(140)
@@ -92,7 +97,7 @@ def test_fused_fallback_label_propagation_equals_driver_path(spark, monkeypatch)
         schema=f"ref string, geometry {FX.GEOMETRY_POLYGON_T}",
     )
     fast = rectify_and_simplify(df)
-    monkeypatch.setattr(GPS, "_CC_DRIVER_MAX", 0)
+    monkeypatch.setattr(CC, "DRIVER_MAX", 0)
     slow = GPS.rectify_and_simplify(df)
     a = {(r["ref"], str(r["geometry"]), r["rectified"], r["n_removed"]) for r in fast.collect()}
     b = {(r["ref"], str(r["geometry"]), r["rectified"], r["n_removed"]) for r in slow.collect()}
@@ -124,3 +129,21 @@ def test_kernel_partitions_sizing(spark):
     assert _kernel_partitions(spark, 0) == 1
     assert _kernel_partitions(spark, 200) == 1
     assert _kernel_partitions(spark, 10_000_000) == shuffle_n
+
+
+def test_kernel_modules_do_not_import_dedupe():
+    """Python workers unpickle the geometry and conflate kernels, importing
+    their modules' import chains on every start; the dedupe module (numpy,
+    pyarrow, the shingle kernels) must stay out of that chain."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import sys\n"
+        "import building2osm_spark.operators.geometry_passes\n"
+        "import building2osm_spark.operators.conflate\n"
+        "assert 'building2osm_spark.operators.dedupe' not in sys.modules\n"
+    )
+    repo = Path(__file__).resolve().parents[1]
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=repo)

@@ -523,10 +523,12 @@ def test_pii_scrub_and_urls(spark):
     assert "Python" not in plan  # all native
 
 
-def test_pair_components_and_keep_best(spark, monkeypatch):
-    """Generic pair-graph clustering + keep-best canonicalization:
-    driver union-find ≡ distributed min-label propagation (chain graph,
-    diameter 4), singleton passthrough, rank + tie rules."""
+def test_pair_components_and_keep_best(spark, monkeypatch, jobs_of):
+    """Generic id-set clustering + keep-best canonicalization: driver
+    union-find ≡ distributed min-label propagation (chain graph, diameter
+    4, and a set with a NULL member), singleton passthrough, rank + tie
+    rules, and the job budget of each path."""
+    from building2osm_spark.operators import components as CC
     from building2osm_spark.operators import dedupe as DDm
 
     # chain 1-2-3-4-5 plus pair (10,11); 20 is unpaired
@@ -535,18 +537,28 @@ def test_pair_components_and_keep_best(spark, monkeypatch):
         schema="id_a long, id_b long",
     )
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+    # plus a four-id set with a NULL member: the NULL is dropped, the set
+    # still joins 11's cluster
+    sets = pairs.select(F.array("id_a", "id_b").alias("ids")).unionByName(
+        spark.createDataFrame([([30, None, 11, 12],)], schema="ids array<long>")
+    )
+    expected_sets = {**expected, 12: 10, 30: 10}
 
-    got_driver = {
-        r.node: r.cluster for r in DDm.pair_components(pairs).collect()
-    }
-    assert got_driver == expected
+    def labels():
+        comp, n = CC.connected_components(sets)
+        got = {r.node: r.cluster for r in comp.collect()}
+        assert n == len(got)
+        return got
 
-    monkeypatch.setattr(DDm, "_CLUSTER_DRIVER_MAX", 0)
-    got_dist = {r.node: r.cluster for r in DDm.pair_components(pairs).collect()}
-    assert got_dist == expected
+    got_driver, n_jobs = jobs_of(labels)
+    assert got_driver == expected_sets and n_jobs == 5
+
+    monkeypatch.setattr(CC, "DRIVER_MAX", 0)
+    got_dist, n_jobs = jobs_of(labels)
+    assert got_dist == expected_sets and n_jobs == 44
     # non-convergence raises rather than splitting (diameter 4 > 2*1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        DDm.pair_components(pairs, max_iter=1)
+        CC.connected_components(sets, max_iter=1)
     monkeypatch.undo()
 
     docs = spark.createDataFrame(
@@ -554,7 +566,10 @@ def test_pair_components_and_keep_best(spark, monkeypatch):
          (10, 7, "f"), (11, 7, "g"), (20, 3, "h")],
         schema="doc_id long, score long, payload string",
     )
-    kept = DDm.dedup_keep_best(docs, pairs, rank_col="score").collect()
+    kept, n_jobs = jobs_of(
+        lambda: DDm.dedup_keep_best(docs, pairs, rank_col="score").collect()
+    )
+    assert n_jobs == 7
     by_cluster = {r.cluster: r for r in kept}
     assert set(by_cluster) == {1, 10, 20}
     # cluster 1: max score 9 tied between docs 2 and 3 → lowest id wins
