@@ -3,22 +3,29 @@
 Replaces the reference's O(D·N) district loop (municipality_split.py:379-402
 driving the ray cast at :204-243) with a cell-indexed join:
 
-  1. polygon side: cell cover at resolution `res` (pandas UDF over the
-     geometry), exploded to (cell, poly_id) pairs;
+  1. polygon side: cell cover at resolution `res`, one row per
+     (cell, polygon) with the polygon's flattened rings (interior cells
+     carry none and skip the ray cast);
   2. point side: cell id computed as a native Catalyst expression
      (columns.cell_id_col) — never leaves the JVM;
   3. candidate generation: equi-join on cell. With `broadcast` (the default
-     for subdivision-scale polygon sides) the cover is broadcast — the
-     points table is NEVER shuffled, which is what makes this run at
-     10^12-point scale: the big side streams map-only;
+     for subdivision-scale polygon sides) the cover is built on the driver
+     and broadcast — the points table is NEVER shuffled, which is what
+     makes this run at 10^12-point scale: the big side streams map-only;
   4. exact refinement: the ray cast as Catalyst higher-order expressions
-     on the candidate rows (rings_contains_col) — polygon rings ride the
-     tiny broadcast side, interior cells skip the test entirely.
+     on the candidate rows (rings_contains_col).
 
-Big-polygon-side variant (`broadcast=False`): covers are shuffled on cell
-and the refinement rings travel via an equi-join instead of the broadcast;
-AQE skew-join plus the adaptive hot-cell explosion in
-operators/partitioning.py keep cell skew bounded.
+Unassigned points (`keep_unassigned=True`) come out of the same probe:
+the cover side holds one row per cell with the array of that cell's
+candidates, each point left-joins its cell's array, the ray cast filters
+it and explode_outer emits one row per containing polygon or one NULL
+row — still map-only, one output row set per input row.
+
+Big-polygon-side variant (`broadcast=False`): covers come from a pandas
+UDF, are shuffled on cell and the refinement rings travel via an
+equi-join instead of the broadcast; AQE skew-join plus the adaptive
+hot-cell explosion in operators/partitioning.py keep cell skew bounded.
+Small polygon sides can skip the join entirely: assign_points_unrolled.
 """
 
 from __future__ import annotations
@@ -228,6 +235,100 @@ def _drop_shadowed_cells(
     return cov.join(shadowed, [poly_id, "cell"], "left_anti")
 
 
+def _side_frame(
+    spark, side_rows: list[tuple], poly_id: str, id_type, nested: bool
+) -> DataFrame:
+    """The driver-built cover side as ONE Arrow table: the classic
+    createDataFrame(list) route is RDD-pickle-backed — every task of
+    every broadcast build spins a Python worker to unpickle its slice
+    (measured ~6 task-s of near-zero-JVM-cpu wait per flagship run, ~0.2 s
+    of its 1.4 s wall). The Arrow path deserializes JVM-side; no Python in
+    the runtime plan.
+
+    Flat: one (__cell, poly_id, __full, __rings) row per cover cell.
+    Nested: one (__cell, __cands) row per distinct cell, __cands holding
+    that cell's candidates as (id, full, rings) structs — grouped here on
+    the driver, so no Spark job is added."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    id_t = to_arrow_type(id_type)
+    rings_t = pa.list_(
+        pa.struct(
+            [
+                ("hole", pa.bool_()),
+                ("poly", pa.int32()),
+                ("xs", pa.list_(pa.float64())),
+                ("ys", pa.list_(pa.float64())),
+            ]
+        )
+    )
+    if nested:
+        by_cell: dict[int, list[dict]] = {}
+        for c, i, f, r in side_rows:
+            by_cell.setdefault(c, []).append({"id": i, "full": f, "rings": r})
+        rows = [{"__cell": c, "__cands": v} for c, v in by_cell.items()]
+        cand_t = pa.struct([("id", id_t), ("full", pa.bool_()), ("rings", rings_t)])
+        schema = pa.schema([("__cell", pa.int64()), ("__cands", pa.list_(cand_t))])
+    else:
+        rows = [
+            {"__cell": c, poly_id: i, "__full": f, "__rings": r}
+            for c, i, f, r in side_rows
+        ]
+        schema = pa.schema(
+            [
+                ("__cell", pa.int64()),
+                (poly_id, id_t),
+                ("__full", pa.bool_()),
+                ("__rings", rings_t),
+            ]
+        )
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
+
+
+def _probe_keep_unassigned(
+    points: DataFrame,
+    side: DataFrame,
+    levels: list[int],
+    *,
+    poly_id: str,
+    lon: str,
+    lat: str,
+    broadcast: bool,
+) -> DataFrame:
+    """Each point row left-joins its cell's candidate list, one join per
+    cover resolution present (usually one); the ray cast filters the list
+    and explode_outer emits one row per containing polygon, or one NULL
+    row when none contains the point (uncovered cell, NULL coordinate, or
+    a candidate list the ray cast empties). Row-preserving by
+    construction: duplicate and NULL-attribute point rows need no
+    regrouping, so the points table is never shuffled on the broadcast
+    path and never read twice (the 3D Hash Join's nested probe,
+    CIDR 2022)."""
+    px, py = F.col(lon), F.col(lat)
+    out = points
+    hits = []
+    for L in levels:
+        key, cands = f"__cell{L}", f"__cands{L}"
+        s = side.select(F.col("__cell").alias(key), F.col("__cands").alias(cands))
+        out = (
+            out.withColumn(key, cell_id_col(px, py, L))
+            .join(F.broadcast(s) if broadcast else s, key, "left")
+            .drop(key)
+        )
+        hit = F.filter(
+            F.col(cands),
+            lambda c: c["full"] | rings_contains_col(c["rings"], px, py),
+        )
+        # a point with no candidates at this level reads NULL; concat
+        # would turn the whole list NULL, so only coalesce when merging
+        hits.append(hit if len(levels) == 1 else F.coalesce(hit, F.array()))
+    hit = hits[0] if len(hits) == 1 else F.concat(*hits)
+    return out.select(
+        *points.columns, F.explode_outer(hit).alias("__m")
+    ).select(*points.columns, F.col("__m")["id"].alias(poly_id))
+
+
 def assign_points_to_polygons(
     points: DataFrame,
     polys: DataFrame,
@@ -242,12 +343,19 @@ def assign_points_to_polygons(
     keep_unassigned: bool = False,
     compact_levels: int = 0,
 ) -> DataFrame:
-    """Point rows annotated with the containing polygon's id.
+    """Point rows annotated with the containing polygon's id, columns
+    (*points.columns, poly_id).
 
-    Semantics match municipality_split.py:737-750: a point inside several
-    polygons gets one row per containing polygon; `keep_unassigned=True`
-    keeps non-contained points with NULL poly_id (the 'leftover' anti-join
-    of municipality_split.py:752-762 becomes a simple filter).
+    Semantics match municipality_split.py:737-762: a point inside several
+    polygons gets one row per containing polygon. `keep_unassigned=True`
+    also keeps the reference's leftovers: exactly one NULL-poly_id row per
+    input row that no polygon contains (NULL coordinates included), every
+    input row kept, duplicates too. It runs as one map-only probe
+    (_probe_keep_unassigned: left join on the per-cell candidate list,
+    ray-cast filter, explode_outer) — no second read of the points and no
+    anti-join. `keep_unassigned=False` is the inner join on flat
+    (cell, polygon) rows plus the ray-cast filter: measured faster than
+    the candidate-list shape there (NOTES.md).
 
     The exact ray cast runs as Catalyst higher-order expressions on the
     candidate rows — the whole assignment is one codegen'd JVM stage with
@@ -266,25 +374,6 @@ def assign_points_to_polygons(
     polygon the cover cells are disjoint, so each contained point still
     meets exactly one candidate row per polygon.
     """
-    spark = points.sparkSession
-    covers = polygon_covers(polys, poly_id, geometry, res, multipolygon)
-
-    pts = points.withColumn("__cell", cell_id_col(F.col(lon), F.col(lat), res))
-
-    def multi_res_probe(levels: list[int]) -> DataFrame:
-        """Point-side probe rows for a mixed-resolution cover: one __cell
-        per resolution present (map-only explode; the join filters)."""
-        if levels == [res]:
-            return pts
-        return points.withColumn(
-            "__cell",
-            F.explode(
-                F.array(
-                    *[cell_id_col(F.col(lon), F.col(lat), r) for r in sorted(levels)]
-                )
-            ),
-        )
-
     if broadcast:
         # polygon side is small by assumption: compute covers AND the
         # flattened ring structs driver-side, so the runtime plan
@@ -303,12 +392,12 @@ def assign_points_to_polygons(
                     cell_full[cell] = bool(cell_full.get(cell, False) or f)
                 for ri, ring in enumerate(p):
                     rings_flat.append(
-                        (
-                            ri != 0,
-                            pi,
-                            [float(pt[0]) for pt in ring],
-                            [float(pt[1]) for pt in ring],
-                        )
+                        {
+                            "hole": ri != 0,
+                            "poly": pi,
+                            "xs": [float(pt[0]) for pt in ring],
+                            "ys": [float(pt[1]) for pt in ring],
+                        }
                     )
             # a multipolygon feature whose sub-polygon covers came out
             # at different effective resolutions (max_cells lowering)
@@ -326,57 +415,15 @@ def assign_points_to_polygons(
                 # interior cells carry NO rings: the candidate join row
                 # proves containment by itself (polyfill interior cell)
                 side_rows.append((int(cell), r[poly_id], f, [] if f else rings_flat))
-        # ship the side table as ONE Arrow table: the classic
-        # createDataFrame(list) route is RDD-pickle-backed — every
-        # task of every broadcast build spins a Python worker to
-        # unpickle its slice (measured ~6 task-s of near-zero-JVM-cpu
-        # wait per flagship run, ~0.2 s of its 1.4 s wall). The Arrow
-        # path deserializes JVM-side; no Python in the runtime plan.
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        rings_pa_t = pa.list_(
-            pa.struct(
-                [
-                    ("hole", pa.bool_()),
-                    ("poly", pa.int32()),
-                    ("xs", pa.list_(pa.float64())),
-                    ("ys", pa.list_(pa.float64())),
-                ]
-            )
-        )
-        side = spark.createDataFrame(
-            pa.table(
-                {
-                    "__cell": pa.array(
-                        [c for c, _i, _f, _r in side_rows], pa.int64()
-                    ),
-                    poly_id: pa.array(
-                        [i for _c, i, _f, _r in side_rows],
-                        to_arrow_type(polys.schema[poly_id].dataType),
-                    ),
-                    "__full": pa.array(
-                        [f for _c, _i, f, _r in side_rows], pa.bool_()
-                    ),
-                    "__rings": pa.array(
-                        [
-                            [
-                                {"hole": h, "poly": pi, "xs": xs, "ys": ys}
-                                for (h, pi, xs, ys) in r
-                            ]
-                            for _c, _i, _f, r in side_rows
-                        ],
-                        rings_pa_t,
-                    ),
-                }
-            )
+        side = _side_frame(
+            points.sparkSession, side_rows, poly_id,
+            polys.schema[poly_id].dataType, nested=keep_unassigned,
         )
         # probe every resolution actually present: compaction (and
         # cover_polygon's max_cells res-lowering for huge polygons)
         # yields mixed-res covers; a single-res probe would silently
         # miss every cover cell at another resolution
         levels = sorted(set(C.cell_res([c for c, *_ in side_rows]).tolist())) or [res]
-        pts = multi_res_probe(levels)
     else:
         # the cover can be mixed-resolution even before compaction
         # (cover_polygon's max_cells res-lowering for huge polygons):
@@ -387,6 +434,7 @@ def assign_points_to_polygons(
         # matches). The cover is slim polygon-side metadata; the
         # localCheckpoint keeps the pandas-UDF cover computation from
         # re-running for the levels probe and the join.
+        covers = polygon_covers(polys, poly_id, geometry, res, multipolygon)
         cov = covers.localCheckpoint(eager=False)
         levels = _cover_levels(cov)
         if len(levels) > 1:
@@ -406,7 +454,7 @@ def assign_points_to_polygons(
         if len(levels) > 1 or compact_levels:
             cov = cov.localCheckpoint(eager=False)
             levels = _cover_levels(cov)
-        pts = multi_res_probe(levels or [res])
+        levels = levels or [res]
         side = (
             cov.join(polys.select(poly_id, geometry), poly_id)
             .withColumn(
@@ -416,31 +464,30 @@ def assign_points_to_polygons(
             .drop(geometry)
             .withColumnRenamed("cell", "__cell")
         )
+        if keep_unassigned:
+            side = side.groupBy("__cell").agg(
+                F.collect_list(
+                    F.struct(
+                        F.col(poly_id).alias("id"),
+                        F.col("__full").alias("full"),
+                        F.col("__rings").alias("rings"),
+                    )
+                ).alias("__cands")
+            )
+
+    if keep_unassigned:
+        return _probe_keep_unassigned(
+            points, side, levels, poly_id=poly_id, lon=lon, lat=lat,
+            broadcast=broadcast,
+        )
+    # one probe row per resolution present (map-only explode; the join
+    # filters)
+    cells = [cell_id_col(F.col(lon), F.col(lat), L) for L in levels]
+    pts = points.withColumn(
+        "__cell", cells[0] if len(cells) == 1 else F.explode(F.array(*cells))
+    )
     joined = pts.join(F.broadcast(side) if broadcast else side, "__cell")
-    assigned = joined.filter(
+    return joined.filter(
         F.col("__full")
         | rings_contains_col(F.col("__rings"), F.col(lon), F.col(lat))
     ).drop("__cell", "__rings", "__full")
-
-    if keep_unassigned:
-        # read twice (result + leftover anti-join): materialize into
-        # ContextCleaner-managed blocks instead of a CacheManager entry
-        # that would outlive the call in a long-lived session
-        assigned = assigned.localCheckpoint(eager=True)
-        point_cols = [c for c in points.columns]
-        # null-SAFE anti-join: with plain equality a point row carrying a
-        # NULL attribute column never matches its own assigned copy and
-        # would be emitted twice (assigned + spurious NULL-poly leftover)
-        right = assigned.select(
-            *[F.col(c).alias(f"__a_{c}") for c in point_cols]
-        ).distinct()
-        cond = F.lit(True)
-        for c in point_cols:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"__a_{c}"))
-        leftovers = points.join(right, cond, "left_anti").withColumn(
-            poly_id, F.lit(None).cast(assigned.schema[poly_id].dataType)
-        )
-        assigned = assigned.select(*point_cols, poly_id).unionByName(
-            leftovers.select(*point_cols, poly_id)
-        )
-    return assigned

@@ -30,7 +30,8 @@ from ..sources.fixtures import image_locations_batch
 def with_location(images: DataFrame, hot_frac: float = 0.0) -> DataFrame:
     """Attach the derived (lon, lat) to an images table (FIXTURES.md §1:
     the table is keyed by location; loc(image_id) is a pure function).
-    Arrow-batched — the bytes column is not touched."""
+    Arrow-batched — the bytes column is not touched. image_id must not
+    be NULL: fnv1a64_batch raises ValueError rather than locate it."""
 
     @F.pandas_udf(
         T.StructType(

@@ -61,11 +61,15 @@ def fnv1a64_batch(ids: np.ndarray) -> np.ndarray:
     fixed-width byte matrix (NUL-padded); the fold runs as max_len
     vectorized passes masked on the padding, so an id holding U+0000
     (the only code point whose UTF-8 form has a 0x00 byte) would hash
-    like its NUL-free prefix: such ids raise ValueError instead.
-    Asserted against the scalar form in tests/test_fixture_hash_batch.py."""
+    like its NUL-free prefix: such ids raise ValueError instead. A None
+    (NULL) id raises ValueError too: the str cast would hash it as the
+    id "None". Asserted against the scalar form in
+    tests/test_fixture_hash_batch.py."""
     n = len(ids)
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
+    if any(i is None for i in ids):
+        raise ValueError("fnv1a64_batch: ids must not be None (NULL)")
     if "\x00" in "".join(map(str, ids)):
         raise ValueError("fnv1a64_batch: ids must not contain NUL (U+0000)")
     # fixed-width bytes view; non-ASCII survives via per-element encode

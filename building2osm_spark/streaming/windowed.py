@@ -47,7 +47,7 @@ def windowed_district_counts(
         poly_id="district",
         multipolygon=True,
         broadcast=True,
-        keep_unassigned=False,  # leftover anti-join is a batch-only shape
+        keep_unassigned=False,  # per-district counts: uncontained points count nowhere
     )
     return (
         assigned.withWatermark(time_col, watermark)

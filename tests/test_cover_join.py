@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,27 +140,76 @@ def test_polygon_native_building_assignment(spark):
     assert len(got) >= 30  # some L-shape vertex-mean centres fall outside
 
 
-def test_keep_unassigned_marks_leftovers(spark):
-    # half the grid only → points in the uncovered half get NULL poly_id
-    images = FX.spark_images(spark, 300, with_loc=True)
-    subs = FX.spark_subdivisions(spark, 4, 4)
-    half = subs.filter(F.col("name") < "2")  # districts with ix in {0,1}
-    got = assign_points_to_polygons(
-        images.select("image_id", "lon", "lat"),
-        half.select(F.col("name").alias("poly_id"), "geometry"),
-        multipolygon=True,
-        keep_unassigned=True,
+# job budget of the keep_unassigned=True build + collect on the
+# 300-image input below (ROADMAP item 9); the leftovers ride the probe
+KEEP_UNASSIGNED_JOBS = {True: 2, False: 6}
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_keep_unassigned_marks_leftovers(spark, jobs_of, broadcast):
+    # half the grid only → points in the uncovered half get NULL poly_id;
+    # plus a square overlapping four districts, duplicate point rows and
+    # a NULL-lon point
+    images_pdf = FX.images_pdf(300, with_loc=True)[["image_id", "lon", "lat"]]
+    extra = [
+        ("in_two", 10.65, 59.89),  # district 000 and the square
+        ("dup_in", 10.66, 59.91),
+        ("dup_in", 10.66, 59.91),
+        ("dup_out", 10.95, 59.95),  # ix = 3: outside the half grid
+        ("dup_out", 10.95, 59.95),
+        ("no_lon", None, 59.9),
+    ]
+    images_pdf = pd.concat(
+        [images_pdf, pd.DataFrame(extra, columns=["image_id", "lon", "lat"])],
+        ignore_index=True,
     )
-    rows = got.collect()
+    x0, x1, y0, y1 = 10.62, 10.72, 59.88, 59.92
+    square = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+    subs_pdf = FX.subdivisions_pdf(4, 4)[["name", "geometry"]]
+    subs_pdf = pd.concat(
+        [
+            subs_pdf[subs_pdf["name"] < "2"],  # districts with ix in {0,1}
+            pd.DataFrame([{"name": "1zz Square", "geometry": [[square]]}]),
+        ],
+        ignore_index=True,
+    )
+    images = spark.createDataFrame(images_pdf, "image_id string, lon double, lat double")
+    half = spark.createDataFrame(
+        subs_pdf, f"poly_id string, geometry {FX.GEOMETRY_MULTIPOLYGON_T}"
+    )
+
+    rows, n_jobs = jobs_of(
+        lambda: assign_points_to_polygons(
+            images, half, multipolygon=True, keep_unassigned=True, broadcast=broadcast
+        ).collect()
+    )
+    assert n_jobs == KEEP_UNASSIGNED_JOBS[broadcast]
+
+    xy = images_pdf[["lon", "lat"]].to_numpy(np.float64)  # None → NaN
+    inside = {
+        name: geom.points_in_multipolygon(
+            xy, [[np.asarray(r, dtype=np.float64) for r in p] for p in g]
+        )
+        & ~np.isnan(xy).any(axis=1)
+        for name, g in zip(subs_pdf["name"], subs_pdf["geometry"])
+    }
+    want = Counter()
+    for i, img_id in enumerate(images_pdf["image_id"]):
+        names = [n for n, m in inside.items() if m[i]]
+        want.update((img_id, n) for n in names or [None])
+    got = Counter((r.image_id, r.poly_id) for r in rows)
+    assert got == want
+    assert got[("in_two", None)] == 0 and sum(got[("in_two", n)] for n in inside) == 2
+    assert got[("dup_out", None)] == 2 and got[("no_lon", None)] == 1
+    assert sum(c for (i, _), c in got.items() if i == "dup_in") == 4
     n_null = sum(1 for r in rows if r.poly_id is None)
-    n_assigned = sum(1 for r in rows if r.poly_id is not None)
-    assert n_null > 0 and n_assigned > 0
-    assert {r.image_id for r in rows} == {f"img_{i:012d}" for i in range(300)}
+    assert n_null > 3 and len(rows) - n_null > 0
 
 
-def test_keep_unassigned_null_attr_not_duplicated(spark):
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_keep_unassigned_null_attr_not_duplicated(spark, broadcast):
     """A point row carrying a NULL attribute column must not appear twice
-    (assigned + spurious leftover): the leftover anti-join is null-safe."""
+    (assigned + spurious leftover): each input row yields its own rows."""
     images = FX.spark_images(spark, 200, with_loc=True).select(
         "image_id",
         "lon",
@@ -172,7 +224,9 @@ def test_keep_unassigned_null_attr_not_duplicated(spark):
         subs.select(F.col("name").alias("poly_id"), "geometry"),
         multipolygon=True,
         keep_unassigned=True,
+        broadcast=broadcast,
     )
+    assert got.columns == ["image_id", "lon", "lat", "attr", "poly_id"]
     per_image = got.groupBy("image_id").count().collect()
     assert all(r["count"] == 1 for r in per_image)
     assert len(per_image) == 200
@@ -180,18 +234,24 @@ def test_keep_unassigned_null_attr_not_duplicated(spark):
     assert got.filter(F.col("attr").isNull()).count() == 20
 
 
-def test_points_side_not_shuffled_in_broadcast_plan(spark, data):
+@pytest.mark.parametrize("keep_unassigned", [False, True])
+def test_points_side_not_shuffled_in_broadcast_plan(
+    spark, data, final_plan, keep_unassigned
+):
     """Scale contract: with broadcast=True the points side must reach the
     refine stage without an Exchange on the points (only the tiny cover side
-    is exchanged/broadcast)."""
+    is broadcast), with or without the unassigned rows."""
     images, subs, *_ = data
     got_df = assign_points_to_polygons(
         images.select("image_id", "lon", "lat"),
         subs.select(F.col("name").alias("poly_id"), "geometry"),
         multipolygon=True,
         broadcast=True,
+        keep_unassigned=keep_unassigned,
     )
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # the only allowed exchange is the broadcast one
-    assert "ShuffleExchange" not in plan.replace("BroadcastExchange", "")
+    got_df.collect()
+    plan = final_plan(got_df)
+    assert "BroadcastHashJoin" in plan
+    # the only allowed exchange is the broadcast one (Spark 4 prints a
+    # shuffle as `Exchange hashpartitioning(...)`)
+    assert "Exchange" not in plan.replace("BroadcastExchange", "")

@@ -40,6 +40,14 @@ def test_fnv1a64_batch_rejects_nul():
             fnv1a64_batch(np.asarray(bad, dtype=object))
 
 
+def test_fnv1a64_batch_rejects_none():
+    # str(None) would hash a NULL id as the id "None"
+    assert int(fnv1a64_batch(np.asarray(["None"], dtype=object))[0]) == int(fnv1a64("None"))
+    for bad in ([None], ["None", None], [None, "a"]):
+        with pytest.raises(ValueError, match="None"):
+            fnv1a64_batch(np.asarray(bad, dtype=object))
+
+
 def test_image_locations_batch_bit_identical():
     ids = _ids()
     for hot_frac in (0.0, 0.3, 1.0):

@@ -1,0 +1,39 @@
+"""No-Spark guard: operator code never reaches into private JVM handles
+(`_jsparkSession`, `_jdf`, `_jvm`, `_jsc`), which tie an operator to a
+classic-mode session and to Spark internals that change between releases."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import building2osm_spark.operators as operators
+
+PRIVATE_HANDLE = re.compile(r"\b(_jsparkSession|_jdf|_jvm|_jsc)\b")
+
+# modules that still name a handle, each with its open mend: conflate's
+# ring-carry regime reads the broadcast threshold and a plan size
+# estimate (ROADMAP item 5)
+ALLOWED = {"conflate.py"}
+
+
+def _offenders() -> dict[str, list[str]]:
+    out = {}
+    root = Path(operators.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        hits = [
+            f"{i}: {line.strip()}"
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if PRIVATE_HANDLE.search(line)
+        ]
+        if hits:
+            out[path.relative_to(root).as_posix()] = hits
+    return out
+
+
+def test_operators_name_no_private_jvm_handle():
+    found = _offenders()
+    new = {name: hits for name, hits in found.items() if name not in ALLOWED}
+    assert not new, f"operator modules naming private JVM handles: {new}"
+    # an allow-list entry whose module no longer names a handle goes too
+    assert ALLOWED <= set(found), f"stale allow-list entries: {ALLOWED - set(found)}"
