@@ -529,14 +529,13 @@ def main() -> None:
         # — the at-scale join regime where ring tables exceed any
         # broadcast budget (at default configs this fixture's squares
         # compress under 10 MB and the planner broadcasts the rings,
-        # making bucketing moot). The plan drops both ring exchanges
-        # (10 vs 12, plan-asserted in tests/test_bucketed.py); the
-        # extras record the plain no-broadcast control from the same
-        # session. HONEST LOCAL-MODE CAVEAT (BASELINE.md round 4): in a
-        # single JVM a shuffle is a memcpy, so the saved exchanges are
-        # wall-noise here even at 4x ring payload — the recipe's win is
-        # the 2 fewer NETWORK transfers per run on a real cluster, which
-        # local[32] structurally cannot exhibit.
+        # making bucketing moot). conflate() carries the rings on its
+        # candidate stream, so the ring re-joins whose exchanges the
+        # bucketing used to drop no longer exist: this plan has as many
+        # hash exchanges as the plain no-broadcast control the extras
+        # record from the same session (tests/test_bucketed.py asserts
+        # no more), and the leaf now times the same plan over a
+        # bucketed scan.
         from building2osm_spark.operators.conflate import conflate_from_base
         from building2osm_spark.sources.bucketed import write_conflation_base
 

@@ -280,8 +280,8 @@ def main(argv=None) -> int:
     m.add_argument("--osm-base", metavar="PREFIX",
                    help="standing-pipeline mode: read the OSM side from the "
                         "bucketed base table <PREFIX>_osm (built once from "
-                        "--osm if absent); repeated merges against the same "
-                        "base skip the osm-ring exchange")
+                        "--osm if absent), so repeated merges reuse one "
+                        "OSM snapshot")
     m.add_argument("--imports", required=True)
     m.add_argument("--out", required=True)
     m.add_argument("--maxdist", type=float, default=10.0)

@@ -6,11 +6,12 @@ by a set-based formulation:
 
   1. earlier-import anti-join on exploded ';'-multi-valued ref:bygningsnr
      (building_merge.py:659-674 → J4);
-  2. candidate pairs from a 3×3 cell-block equi-join on building centres —
+  2. candidate pairs from a fringe-cell equi-join on building centres —
      a superset of both direction's ±2·margin_hausdorff strict bboxes
      (building_merge.py:694-701 forward, :625-632 reverse), then the exact
      strict-inequality bbox predicates as native filters (convention:
-     min < c < max, NOT ≤ — SURVEY.md P5);
+     min < c < max, NOT ≤ — SURVEY.md P5). Both rings ride this
+     candidate stream, so the stage has exactly these two joins;
   3. symmetric Hausdorff per pair, once, in an Arrow numpy kernel (the
      native columns.hausdorff_col variant measured 2× slower — see the
      kernel-choice note at the scoring step);
@@ -21,12 +22,17 @@ by a set-based formulation:
      building_merge.py:720 is preserved) and the area-ratio gate
      (0.4 < osm/import < 2.5, :728).
 
+Steps 1-3 are _scored_candidates, the one candidate stage under every
+operator here: conflate(), full_debug_spray(), identical_pair_count()
+(J3) and the greedy replay.
+
 Order-dependence note (SURVEY.md J2 trap): the reference matches greedily
 in OSM iteration order and removes each matched import building
 (building_merge.py:731), so a later OSM building cannot reuse it. The
 mutual-best formulation is order-free; the two agree whenever best matches
-are unique (parity-tested against the reference's own merge_buildings on
-fixtures; ties broken by id).
+are unique (parity-tested against the reference's merge_buildings outcome
+on fixtures; ties broken by id). _greedy_replay reproduces the greedy scan
+per connected component for conflate_greedy() and greedy_debug_spray().
 """
 
 from __future__ import annotations
@@ -142,79 +148,34 @@ def anti_join_earlier_imports(
     return imports.join(F.broadcast(osm_refs), import_ref, "left_anti")
 
 
-def _ring_carry_regime(o_side: DataFrame) -> bool:
-    """True when the planner would BROADCAST the OSM build side of the
-    candidate cell join even with its ring payload attached: the session's
-    autoBroadcastJoinThreshold is positive and the side's own optimizer
-    size estimate fits under it (the same inputs the planner's join
-    selection reads). In that regime ring payloads can ride the candidate
-    stream for free — the probe side never shuffles under a broadcast
-    join. When broadcasting is off (the documented at-scale regime, e.g.
-    conflate_from_base under autoBroadcastJoinThreshold=-1) or the side
-    is too big, rings must stay OFF the candidate path: the cell join
-    exchanges the 9-cell-exploded stream, and shuffling ring geometry per
-    candidate would dominate the stage."""
-    spark = o_side.sparkSession
-    try:
-        thr = int(
-            spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-        )
-        if thr <= 0:
-            return False
-        est = (
-            o_side._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        return int(est.longValue() if hasattr(est, "longValue") else est) <= thr
-    except Exception:
-        return False
-
-
 def _scored_candidates(
     osm: DataFrame, imports: DataFrame, margin_hausdorff: float
 ) -> DataFrame:
     """Candidate generation + exact bbox flags + Hausdorff scoring — the
-    shared stage under conflate() and full_debug_spray(). Returns
-    (osm_id, i_ref, o_lon/o_lat/o_area/tagged, i_lon/i_lat/i_area,
-    fwd, rev, hausdorff_m), one row per bbox-surviving candidate pair."""
-    # J4: drop already-imported refs; skip OSM buildings already reffed
-    # Ring-payload placement is REGIME-DEPENDENT (round 6, measured):
-    #  - broadcast regime (_ring_carry_regime): rings ride the candidate
-    #    stream. The probe side of a broadcast join never shuffles, rows
-    #    only materialize after the bbox filter (pushed into the join
-    #    condition), so carrying rings is free — and it deletes both
-    #    ring re-join broadcast builds (two 1M-entry ring relations,
-    #    ~21 task-s at city-1M scale; 8.7/9.0 -> 6.9/7.6 s interleaved
-    #    same-session A/B, identical 699,992 matches).
-    #  - shuffle regime (autoBroadcastJoinThreshold<=0 or side too big):
-    #    the 9-cell exploded join exchanges the candidate stream, and
-    #    shuffling ring geometry per candidate would dominate the stage
-    #    (in a dense city block each OSM building meets O(100)
-    #    candidates). Rings are split off and re-join once per SURVIVING
-    #    pair (≈1 per building) below — the shape conflate_from_base's
-    #    bucketed ring joins rely on (tests/test_bucketed.py).
-    imp_all = anti_join_earlier_imports(imports, osm)
-    o_all = osm.filter(F.col("ref_tag").isNull())
-    carry = _ring_carry_regime(
-        o_all.select("osm_id", "c_lon", "c_lat", "area", "tagged", "ring")
-    )
-    imp_cols = [
+    one candidate stage under conflate(), the greedy replay, both debug
+    sprays and identical_pair_count(). Returns (osm_id, i_ref,
+    o_lon/o_lat/o_area/tagged, i_lon/i_lat/i_area, fwd, rev, hausdorff_m),
+    one row per bbox-surviving candidate pair."""
+    # J4: drop already-imported refs; skip OSM buildings already reffed.
+    # Both rings ride the candidate stream in every join regime: the
+    # fringe explode replicates an import only ~1.6×, and carrying beat
+    # or tied re-joining the rings after the bbox filter at 1M per side,
+    # broadcast, shuffled and bucketed alike (NOTES round-6 addendum fact 2).
+    imp = anti_join_earlier_imports(imports, osm).select(
         F.col("ref").alias("i_ref"),
         F.col("c_lon").alias("i_lon"),
         F.col("c_lat").alias("i_lat"),
         F.col("area").alias("i_area"),
-    ]
-    o_cols = [
+        F.col("ring").alias("i_ring"),
+    )
+    o = osm.filter(F.col("ref_tag").isNull()).select(
         F.col("osm_id"),
         F.col("c_lon").alias("o_lon"),
         F.col("c_lat").alias("o_lat"),
         F.col("area").alias("o_area"),
         F.col("tagged"),
-    ]
-    if carry:
-        imp_cols.append(F.col("ring").alias("i_ring"))
-        o_cols.append(F.col("ring").alias("o_ring"))
-    imp = imp_all.select(*imp_cols)
-    o = o_all.select(*o_cols)
+        F.col("ring").alias("o_ring"),
+    )
 
     # candidate superset: fringe cell block around the IMPORT centre ×
     # OSM cell — pair-set identical to the full 3×3 explode (see
@@ -222,9 +183,7 @@ def _scored_candidates(
     # can hide a partner) and to exploding the OSM side instead (the
     # neighbour relation is symmetric). The import side is the EXPLODED
     # side so the single-cell OSM side is the broadcast build (round 6:
-    # a 9N-entry build was a measured 50 task-s stage at 1M buildings);
-    # the fringe cut the exploded stream 9× → ~1.6× replication, which
-    # both regimes pay for (broadcast probe CPU / shuffle bytes).
+    # a 9N-entry build was a measured 50 task-s stage at 1M buildings).
     cand = (
         imp.withColumn(
             "__cells",
@@ -277,18 +236,9 @@ def _scored_candidates(
     # ~2× slower here — nested transform/zip_with allocations per element
     # lose to one vectorized numpy matrix kernel per Arrow batch
     # (5.0 s vs 2.4 s at 100k city pairs; NOTES 'hard-won facts' #4).
-    if not carry:
-        # shuffle regime: rings join in only here, after the bbox filter
-        # has cut candidates to ≈1 per building
-        i_rings = imp_all.select(
-            F.col("ref").alias("i_ref"), F.col("ring").alias("i_ring")
-        )
-        o_rings = o_all.select("osm_id", F.col("ring").alias("o_ring"))
-        cand = cand.join(o_rings, "osm_id").join(i_rings, "i_ref")
-    scored = cand.withColumn(
+    return cand.withColumn(
         "hausdorff_m", hausdorff_udf(F.col("o_ring"), F.col("i_ring"))
     ).drop("o_ring", "i_ring")
-    return scored
 
 
 def conflate(
@@ -392,17 +342,35 @@ def _mutual_best(
     )
 
 
-def _greedy_grouped(
+def _greedy_replay(
     osm: DataFrame,
     imports: DataFrame,
     margin_hausdorff: float,
+    margin_tagged: float,
+    margin_area: float,
     osm_order_col: str | None,
     import_order_col: str | None,
 ) -> DataFrame:
-    """Shared prep for the greedy kernels (conflate_greedy /
-    greedy_debug_spray): scored candidates + scan-order columns +
-    connected-component assignment, one materialization feeding both the
-    component job and the group pass."""
+    """The reference's greedy scan (building_merge.py:680-735) replayed
+    per connected component of the candidate-pair graph — the one kernel
+    under conflate_greedy() and greedy_debug_spray().
+
+    OSM buildings are scanned in insertion order; each takes its best
+    REMAINING import (strict `<` over import scan order, so the earliest
+    import wins ties), the reverse check scans OSM buildings not yet
+    matched (a matched building's tags gain the import properties —
+    ref:bygningsnr included in the standard building2osm import files —
+    so reverse_match's ref filter excludes it), and an accepted import is
+    removed in place, invisible to later OSM buildings.
+
+    Returns one row per scanned OSM building with at least one remaining
+    forward candidate: (osm_id, ref — the accepted import or NULL,
+    best_h — the minimum Hausdorff over the remaining candidates, ident_h
+    — the last sub-1 m one in import scan order or NULL, size_ratio — the
+    area ratio when only the area gate rejected the mutual pick, else
+    NULL)."""
+    import pandas as pd
+
     scored = _scored_candidates(osm, imports, margin_hausdorff)
     if osm_order_col is not None:
         scored = scored.join(
@@ -420,15 +388,109 @@ def _greedy_grouped(
         )
     else:
         scored = scored.withColumn("__i_ord", F.col("i_ref"))
+    # one materialization feeds both the component job and the group pass
     scored = scored.localCheckpoint(eager=False)
     # the imports one OSM building meets are connected; component id =
     # min i_ref reachable over the bipartite candidate graph
     comp, _ = connected_components(
         scored.groupBy("osm_id").agg(F.collect_set("i_ref")).drop("osm_id")
     )
-    return scored.join(
+    grouped = scored.join(
         comp.select(F.col("node").alias("i_ref"), F.col("cluster").alias("component")),
         "i_ref",
+    )
+
+    mh, mt, ma, ident = margin_hausdorff, margin_tagged, margin_area, IDENTICAL_MARGIN
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        osm_rows = (
+            pdf[["osm_id", "__o_ord", "tagged", "o_area"]]
+            .drop_duplicates("osm_id")
+            .sort_values(["__o_ord", "osm_id"])
+        )
+        # forward candidates in IMPORT scan order: best selection uses the
+        # reference's strict `<` (earliest minimal candidate wins ties) and
+        # IDENTICAL overwrites per sub-1m candidate in this same order
+        fwd = pdf[pdf["fwd"]].sort_values(["__i_ord", "i_ref"])
+        fwd_by_osm = {k: g for k, g in fwd.groupby("osm_id", sort=False)}
+        rev = pdf[pdf["rev"]].sort_values(["hausdorff_m", "__o_ord", "osm_id"])
+        rev_by_imp = {k: g for k, g in rev.groupby("i_ref", sort=False)}
+
+        remaining = set(pdf["i_ref"])
+        matched_osm: set = set()
+
+        def reverse_best(i_ref):
+            """The import's best not-yet-matched OSM building within the
+            reverse margin (building_merge.py:620-640), or None."""
+            rcands = rev_by_imp.get(i_ref)
+            if rcands is None:
+                return None
+            ralive = rcands[~rcands["osm_id"].isin(matched_osm)]
+            if not len(ralive) or not float(ralive["hausdorff_m"].iloc[0]) < mh:
+                return None
+            return ralive["osm_id"].iloc[0]
+
+        out = {"osm_id": [], "ref": [], "best_h": [], "ident_h": [], "size_ratio": []}
+        for osm_id, _, tagged, o_area in osm_rows.itertuples(index=False):
+            cands = fwd_by_osm.get(osm_id)
+            if cands is None:
+                continue
+            alive = cands[cands["i_ref"].isin(remaining)]
+            if not len(alive):
+                continue
+            ident_h = None
+            best_ref, best_area, best_h = None, 0.0, 9999.0
+            for i_ref, h, i_area in alive[
+                ["i_ref", "hausdorff_m", "i_area"]
+            ].itertuples(index=False):
+                h = float(h)
+                if h < ident:
+                    ident_h = h
+                if h < best_h:
+                    best_ref, best_area, best_h = i_ref, float(i_area), h
+            ref = size_ratio = None
+            # the reference divides unguarded (a 0-area import would raise
+            # there); engine contract: rejected, with no ratio to report
+            if (
+                ((best_h < mh and not tagged) or best_h < mt)
+                and reverse_best(best_ref) == osm_id
+                and best_area != 0
+            ):
+                ratio = float(o_area) / best_area
+                if ma < ratio < 1.0 / ma:
+                    ref = best_ref
+                    remaining.discard(best_ref)
+                    matched_osm.add(osm_id)
+                else:
+                    size_ratio = ratio
+            out["osm_id"].append(osm_id)
+            out["ref"].append(ref)
+            out["best_h"].append(best_h)
+            out["ident_h"].append(ident_h)
+            out["size_ratio"].append(size_ratio)
+        return pd.DataFrame(out)
+
+    return grouped.groupBy("component").applyInPandas(
+        kernel,
+        schema=(
+            "osm_id long, ref string, best_h double, ident_h double, "
+            "size_ratio double"
+        ),
+    )
+
+
+def _dbg_map(best_h, ident_h, size_ratio):
+    """The -debug tag map (building_merge.py:708,716,733): HAUSDORFF and
+    IDENTICAL as ' %.2f', SIZE as '%.1f'; a NULL input drops its key.
+    Formatting is CPython's via Arrow UDFs — the JVM's format_string
+    rounds shortest-repr HALF_UP (NOTES hard-won fact 8)."""
+    return F.map_filter(
+        F.create_map(
+            F.lit("HAUSDORFF"), F.concat(F.lit(" "), format2f_udf(best_h)),
+            F.lit("IDENTICAL"), F.concat(F.lit(" "), format2f_udf(ident_h)),
+            F.lit("SIZE"), format1f_udf(size_ratio),
+        ),
+        lambda _, v: v.isNotNull(),
     )
 
 
@@ -443,16 +505,9 @@ def conflate_greedy(
     import_order_col: str | None = None,
 ) -> DataFrame:
     """conflate() with the reference's exact greedy tie semantics
-    (building_merge.py:680-735): OSM buildings are scanned in insertion
-    order; each takes its best REMAINING import (strict `<`, so the
-    earliest import in list order wins ties), the reverse check scans OSM
-    buildings not yet matched (a matched building's tags gain the import
-    properties — ref:bygningsnr included in the standard building2osm
-    import files — so reverse_match's ref filter excludes it), and an
-    accepted import is removed in place, invisible to later OSM buildings.
-    On corpora with ambiguous ties the default mutual-best conflate() and
-    the reference can count differently; this mode counts identically
-    (parity-tested against the imported reference in
+    (building_merge.py:680-735; see _greedy_replay). On corpora with
+    ambiguous ties the default mutual-best conflate() and the reference
+    can count differently; this mode counts identically (parity-tested in
     tests/test_conflate_greedy.py).
 
     Spark-first shape: the expensive part — candidate generation + one
@@ -468,70 +523,15 @@ def conflate_greedy(
     import_order_col (columns on the inputs) to reproduce a specific file
     order. Returns the conflate() schema: (osm_id, ref, hausdorff_m,
     identical)."""
-    import pandas as pd
-
-    grouped = _greedy_grouped(
-        osm, imports, margin_hausdorff, osm_order_col, import_order_col
+    replay = _greedy_replay(
+        osm, imports, margin_hausdorff, margin_tagged, margin_area,
+        osm_order_col, import_order_col,
     )
-
-    mh, mt, ma, ident = margin_hausdorff, margin_tagged, margin_area, IDENTICAL_MARGIN
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        osm_rows = (
-            pdf[["osm_id", "__o_ord", "tagged", "o_area"]]
-            .drop_duplicates("osm_id")
-            .sort_values(["__o_ord", "osm_id"])
-        )
-        # per-pair lookup and per-side candidate lists pre-sorted by
-        # (h, scan order): strict `<` in the reference's scan keeps the
-        # EARLIEST minimal candidate, which is exactly first-of-this-order
-        fwd = pdf[pdf["fwd"]].sort_values(["hausdorff_m", "__i_ord", "i_ref"])
-        fwd_by_osm = {k: g for k, g in fwd.groupby("osm_id", sort=False)}
-        rev = pdf[pdf["rev"]].sort_values(["hausdorff_m", "__o_ord", "osm_id"])
-        rev_by_imp = {k: g for k, g in rev.groupby("i_ref", sort=False)}
-
-        remaining = set(pdf["i_ref"])
-        matched_osm: set = set()
-        out = {"osm_id": [], "ref": [], "hausdorff_m": [], "identical": []}
-        for osm_id, _, tagged, o_area in osm_rows.itertuples(index=False):
-            cands = fwd_by_osm.get(osm_id)
-            if cands is None:
-                continue
-            alive = cands[cands["i_ref"].isin(remaining)]
-            if not len(alive):
-                continue
-            best = alive.iloc[0]
-            best_h = float(best["hausdorff_m"])
-            if not ((best_h < mh and not tagged) or best_h < mt):
-                continue
-            # reverse: best not-yet-matched OSM building for this import
-            rcands = rev_by_imp.get(best["i_ref"])
-            if rcands is None:
-                continue
-            ralive = rcands[~rcands["osm_id"].isin(matched_osm)]
-            if not len(ralive):
-                continue
-            rbest = ralive.iloc[0]
-            if rbest["osm_id"] != osm_id or not (
-                float(rbest["hausdorff_m"]) < mh
-            ):
-                continue
-            i_area = float(best["i_area"])
-            # reference divides unguarded (a 0-area import would raise
-            # there); mirror conflate()'s engine contract: rejected
-            if i_area == 0 or not (ma < float(o_area) / i_area < 1.0 / ma):
-                continue
-            out["osm_id"].append(osm_id)
-            out["ref"].append(best["i_ref"])
-            out["hausdorff_m"].append(best_h)
-            out["identical"].append(best_h < ident)
-            remaining.discard(best["i_ref"])
-            matched_osm.add(osm_id)
-        return pd.DataFrame(out)
-
-    return grouped.groupBy("component").applyInPandas(
-        kernel,
-        schema="osm_id long, ref string, hausdorff_m double, identical boolean",
+    return replay.filter(F.col("ref").isNotNull()).select(
+        "osm_id",
+        "ref",
+        F.col("best_h").alias("hausdorff_m"),
+        (F.col("best_h") < IDENTICAL_MARGIN).alias("identical"),
     )
 
 
@@ -561,93 +561,15 @@ def greedy_debug_spray(
       SIZE '%.1f'        mutual-best pair passed the Hausdorff thresholds
                          but failed the area-ratio gate (:733).
 
-    Same distributed shape as conflate_greedy: candidate generation +
-    Hausdorff scoring stay set-based; only the per-component replay is
-    sequential. Formatting is CPython '%.2f'/'%.1f' inside the kernel —
-    byte-exact vs the reference by construction (JVM format_string rounds
-    shortest-repr HALF_UP; NOTES hard-won fact 8)."""
-    import pandas as pd
-
-    grouped = _greedy_grouped(
-        osm, imports, margin_hausdorff, osm_order_col, import_order_col
+    The same _greedy_replay as conflate_greedy, so the spray and the
+    greedy match set come from one scan."""
+    replay = _greedy_replay(
+        osm, imports, margin_hausdorff, margin_tagged, margin_area,
+        osm_order_col, import_order_col,
     )
-    mh, mt, ma, ident = margin_hausdorff, margin_tagged, margin_area, IDENTICAL_MARGIN
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        osm_rows = (
-            pdf[["osm_id", "__o_ord", "tagged", "o_area"]]
-            .drop_duplicates("osm_id")
-            .sort_values(["__o_ord", "osm_id"])
-        )
-        # forward candidates in IMPORT scan order: best selection uses the
-        # reference's strict `<` (earliest minimal candidate wins ties) and
-        # IDENTICAL overwrites per sub-1m candidate in this same order
-        fwd = pdf[pdf["fwd"]].sort_values(["__i_ord", "i_ref"])
-        fwd_by_osm = {k: g for k, g in fwd.groupby("osm_id", sort=False)}
-        rev = pdf[pdf["rev"]].sort_values(["hausdorff_m", "__o_ord", "osm_id"])
-        rev_by_imp = {k: g for k, g in rev.groupby("i_ref", sort=False)}
-
-        remaining = set(pdf["i_ref"])
-        matched_osm: set = set()
-        out = {"osm_id": [], "HAUSDORFF": [], "IDENTICAL": [], "SIZE": []}
-        for osm_id, _, tagged, o_area in osm_rows.itertuples(index=False):
-            cands = fwd_by_osm.get(osm_id)
-            if cands is None:
-                continue
-            alive = cands[cands["i_ref"].isin(remaining)]
-            if not len(alive):
-                continue
-            ident_tag = None
-            best_ref, best_area, best_h = None, 0.0, 9999.0
-            for i_ref, h, i_area in alive[
-                ["i_ref", "hausdorff_m", "i_area"]
-            ].itertuples(index=False):
-                h = float(h)
-                if h < ident:
-                    ident_tag = " %.2f" % h
-                if h < best_h:
-                    best_ref, best_area, best_h = i_ref, float(i_area), h
-            haus_tag = " %.2f" % best_h
-            size_tag = None
-            if (best_h < mh and not tagged) or best_h < mt:
-                rcands = rev_by_imp.get(best_ref)
-                if rcands is not None:
-                    ralive = rcands[~rcands["osm_id"].isin(matched_osm)]
-                    if len(ralive):
-                        rbest = ralive.iloc[0]
-                        if rbest["osm_id"] == osm_id and (
-                            float(rbest["hausdorff_m"]) < mh
-                        ):
-                            # reference divides unguarded (0-area import
-                            # would raise); engine contract: rejected, and
-                            # no SIZE tag is emittable without a ratio
-                            if best_area != 0:
-                                ratio = float(o_area) / best_area
-                                if ma < ratio < 1.0 / ma:
-                                    remaining.discard(best_ref)
-                                    matched_osm.add(osm_id)
-                                else:
-                                    size_tag = "%.1f" % ratio
-            out["osm_id"].append(osm_id)
-            out["HAUSDORFF"].append(haus_tag)
-            out["IDENTICAL"].append(ident_tag)
-            out["SIZE"].append(size_tag)
-        return pd.DataFrame(out)
-
-    sprayed = grouped.groupBy("component").applyInPandas(
-        kernel,
-        schema="osm_id long, HAUSDORFF string, IDENTICAL string, SIZE string",
-    )
-    return sprayed.select(
+    return replay.select(
         "osm_id",
-        F.map_filter(
-            F.create_map(
-                F.lit("HAUSDORFF"), F.col("HAUSDORFF"),
-                F.lit("IDENTICAL"), F.col("IDENTICAL"),
-                F.lit("SIZE"), F.col("SIZE"),
-            ),
-            lambda _, v: v.isNotNull(),
-        ).alias("dbg"),
+        _dbg_map(F.col("best_h"), F.col("ident_h"), F.col("size_ratio")).alias("dbg"),
     )
 
 
@@ -659,12 +581,15 @@ def conflate_from_base(
     """Standing-pipeline conflation over a bucketed base written by
     sources.bucketed.write_conflation_base(prefix=...): reads
     <prefix>_osm (bucketed by osm_id) and <prefix>_imports (bucketed by
-    ref) and runs conflate(). The bucket metadata makes the two
-    ring-payload re-joins of the scoring stage — the dominant shuffles at
-    city scale — read co-located buckets instead of exchanging
-    (plan-asserted: tests/test_bucketed.py). kwargs pass through to
-    conflate(), so margin re-runs against the same base stay
-    exchange-free."""
+    ref) and runs conflate(); kwargs pass through to conflate().
+
+    The bucketing saves no exchange any more: rings ride the candidate
+    stream, so no join of the plan keys on osm_id or ref, and the cell
+    join and both windows exchange on keys the base is not bucketed by.
+    The plan has as many hash exchanges as conflate() over plain inputs
+    (5 with broadcasting off, 3 under the default threshold — asserted
+    no more in tests/test_bucketed.py); what remains is a persisted,
+    re-registrable copy of the inputs."""
     from ..sources.bucketed import read_bucketed
 
     osm = read_bucketed(spark, f"{prefix}_osm")
@@ -791,48 +716,10 @@ def conflate_with_tags(
 
 def identical_pair_count(osm: DataFrame, imports: DataFrame) -> int:
     """J3 diagnostic: forward-bbox pairs with Hausdorff < 1 m
-    (building_merge.py:706-709)."""
-    imp = anti_join_earlier_imports(imports, osm)
-    o = osm.filter(F.col("ref_tag").isNull())
-    cand = (
-        o.withColumn(
-            "__cells",
-            _fringe_cells(
-                F.col("c_lon"), F.col("c_lat"), CONFLATE_RES, MARGIN_HAUSDORFF
-            ),
-        )
-        .select(
-            F.col("osm_id"),
-            F.col("ring").alias("o_ring"),
-            F.col("c_lon").alias("o_lon"),
-            F.col("c_lat").alias("o_lat"),
-            # outer: skips the implicit size()>0 re-evaluation of the
-            # fringe expression; the array is never empty (own cell)
-            F.explode_outer("__cells").alias("__cell"),
-        )
-        .join(
-            imp.select(
-                F.col("ref").alias("i_ref"),
-                F.col("ring").alias("i_ring"),
-                F.col("c_lon").alias("i_lon"),
-                F.col("c_lat").alias("i_lat"),
-            ).withColumn("__cell", cell_id_col(F.col("i_lon"), F.col("i_lat"), CONFLATE_RES)),
-            "__cell",
-        )
-    )
-    o_minlon, o_minlat = coordinate_offset_cols(
-        F.col("o_lon"), F.col("o_lat"), -2.0 * MARGIN_HAUSDORFF
-    )
-    o_maxlon, o_maxlat = coordinate_offset_cols(
-        F.col("o_lon"), F.col("o_lat"), +2.0 * MARGIN_HAUSDORFF
-    )
+    (building_merge.py:706-709), counted on the shared candidate stage."""
     return (
-        cand.filter(
-            (o_minlon < F.col("i_lon")) & (F.col("i_lon") < o_maxlon)
-            & (o_minlat < F.col("i_lat")) & (F.col("i_lat") < o_maxlat)
-        )
-        .withColumn("h", hausdorff_udf(F.col("o_ring"), F.col("i_ring")))
-        .filter(F.col("h") < IDENTICAL_MARGIN)
+        _scored_candidates(osm, imports, MARGIN_HAUSDORFF)
+        .filter(F.col("fwd") & (F.col("hausdorff_m") < IDENTICAL_MARGIN))
         .count()
     )
 
@@ -910,27 +797,11 @@ def full_debug_spray(
         .filter(~F.col("accepted"))
         .select("osm_id", F.col("area_ratio").alias("__ratio"))
     )
-    dbg = (
+    return (
         best.join(ident, "osm_id", "left")
         .join(size, "osm_id", "left")
         .select(
             "osm_id",
-            F.map_filter(
-                F.create_map(
-                    F.lit("HAUSDORFF"),
-                    F.concat(F.lit(" "), format2f_udf(F.col("__best"))),
-                    F.lit("IDENTICAL"),
-                    F.when(
-                        F.col("__ident").isNotNull(),
-                        F.concat(F.lit(" "), format2f_udf(F.col("__ident"))),
-                    ),
-                    F.lit("SIZE"),
-                    F.when(
-                        F.col("__ratio").isNotNull(), format1f_udf(F.col("__ratio"))
-                    ),
-                ),
-                lambda _, v: v.isNotNull(),
-            ).alias("dbg"),
+            _dbg_map(F.col("__best"), F.col("__ident"), F.col("__ratio")).alias("dbg"),
         )
     )
-    return dbg

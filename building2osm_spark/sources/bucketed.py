@@ -134,9 +134,7 @@ def write_bucketed(
         # the orphan for qualified or mixed-case names and saveAsTable
         # would then fail on the non-empty location.
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-        jvm = spark.sparkContext._jvm
-        path = jvm.org.apache.hadoop.fs.Path(_table_location(spark, table))
-        fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        fs, path = _fs_path(spark, _table_location(spark, table))
         if fs.exists(path):
             fs.delete(path, True)
     # Repartition on the bucket key FIRST (same murmur3 hash as bucketBy):
@@ -237,21 +235,15 @@ def write_conflation_base(
 ) -> tuple[str, str]:
     """Persist the standing-pipeline conflation base: `osm` bucketed by
     osm_id as <prefix>_osm and `imports` bucketed by ref as
-    <prefix>_imports.
+    <prefix>_imports, read back by operators.conflate.conflate_from_base.
 
-    These are exactly the keys of conflate()'s two ring-payload re-joins
-    (operators/conflate.py _scored_candidates) — the dominant shuffles of
-    the scoring stage at city scale (NOTES round-3 profile: two 1M-ring
-    exchanges of the 5.2 s scoring stage). A bucketed scan's projection/
-    filter chain preserves the bucket distribution, so conflate() picks
-    the exchange-free plan with no code awareness (plan-asserted in
-    tests/test_bucketed.py). Pay this write once; every subsequent
-    conflation against the same base (nightly imports vs a stable OSM
-    snapshot, or re-runs at new margins) skips both ring exchanges via
-    operators.conflate.conflate_from_base.
+    These were the keys of conflate()'s two ring-payload re-joins. Those
+    joins are gone — the rings ride the candidate stream — so the base
+    now removes no exchange from the conflation plan (equal hash-exchange
+    counts, tests/test_bucketed.py); it only persists the inputs in a
+    layout a later JVM can re-register.
 
-    n_buckets defaults to spark.sql.shuffle.partitions so the probe
-    side's exchange partitioning lines up with the buckets.
+    n_buckets defaults to spark.sql.shuffle.partitions.
     """
     spark = osm.sparkSession
     n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -277,22 +277,24 @@ class SnapshotStore:
         are treated as already-committed and dropped. Stages whose
         null-key rows carry real data must assign a synthetic key before
         committing."""
-        spark = new_rows.sparkSession
-        # truncate the lineage so the count and the commit write read ONE
-        # materialization (not re-executions that could disagree for
-        # nondeterministic inputs); eager=False — the job runs at the
-        # first action
-        new_rows = new_rows.localCheckpoint(eager=False)
-        n_new = new_rows.count()
-        prev = self.read(spark, stage) if resumed else None
-        merged = new_rows if prev is None else prev.unionByName(new_rows)
-        prev_id = self.latest(stage)
+        # n_new comes from the manifests' footer row counts: the new
+        # snapshot holds the previous one plus exactly the new rows, so
+        # no job of its own counts (or caches) the increment
+        prev = self.manifest(stage) if resumed else None
+        merged = new_rows
+        if prev is not None:
+            merged = self.read(
+                new_rows.sparkSession, stage, prev["snapshot_id"]
+            ).unionByName(new_rows)
         sid = self.commit(
             merged,
             stage,
             key_col=key_col,
             params=params,
-            inputs=[prev_id] if prev_id and resumed else [],
+            inputs=[prev["snapshot_id"]] if prev else [],
+        )
+        n_new = self.manifest(stage, sid)["row_count"] - (
+            prev["row_count"] if prev else 0
         )
         return sid, n_new
 

@@ -1,109 +1,58 @@
 """Conflation parity: engine mutual-best join vs the reference's own
-merge_buildings() run on identical in-memory input."""
+merge_buildings() outcome on identical in-memory input, read from a
+committed golden and re-run live whenever the reference is importable."""
 
 from __future__ import annotations
 
-import numpy as np
+import functools
+import json
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from building2osm_spark.operators.conflate import conflate, identical_pair_count
 from building2osm_spark.sources import fixtures as FX
 from tests.conftest import import_reference
 
+GOLDEN = Path(__file__).parent / "golden" / "conflate_parity.json"
 
-def run_reference_merge(osm_pdf, import_pdf, debug=False):
+
+@functools.cache
+def _golden() -> dict:
+    with open(GOLDEN) as f:
+        return json.load(f)["corpora"]
+
+
+def parity_corpus(name: str):
+    """(osm_pdf, import_pdf) of a golden corpus, rebuilt from the fixture
+    call the golden records (scripts/gen_conflate_parity.py)."""
+    c = _golden()[name]
+    return getattr(FX, c["fixture"])(**c["kwargs"])
+
+
+def run_reference_merge(name: str, debug=False):
+    """The reference merge_buildings outcome on a golden corpus: the
+    matched (osm_id, ref) set, and with debug=True also the tags dict
+    osm_id → {HAUSDORFF/IDENTICAL/SIZE: value} sprayed at
+    building_merge.py:705-733. Read from tests/golden/conflate_parity.json;
+    when the reference is importable it is also run on the same corpus
+    and must equal the golden, so the golden cannot drift silently."""
+    c = _golden()[name]
+    matched = {(osm_id, ref) for osm_id, ref in c["matched"]}
+    tags = {int(k): dict(v) for k, v in c["spray"].items()}
+    try:
+        ref = import_reference("building_merge")
+    except ModuleNotFoundError:
+        pass
+    else:
+        assert _reference_merge(ref, *parity_corpus(name)) == (matched, tags)
+    return (matched, tags) if debug else matched
+
+
+def _reference_merge(ref, osm_pdf, import_pdf):
     """Drive the reference's merge_buildings on our fixture (module globals
-    set up exactly as load_osm_buildings/load_import_buildings would).
-    With debug=True returns (matched, tags) where tags maps osm_id →
-    {HAUSDORFF/IDENTICAL/SIZE: value} as sprayed at building_merge.py:705-733."""
-    ref = import_reference("building_merge")
-    osm_buildings = []
-    for _, r in osm_pdf.iterrows():
-        way = {
-            "type": "way",
-            "id": int(r["osm_id"]),
-            "nodes": [],
-            "tags": dict(r["tags"]),
-            "polygon": [tuple(p) for p in r["ring"]],
-            "center": (float(r["c_lon"]), float(r["c_lat"])),
-            "area": int(r["area"]),
-        }
-        if r["tagged"]:
-            way["tagged"] = True
-        osm_buildings.append(way)
-    import_buildings = []
-    for _, r in import_pdf.iterrows():
-        import_buildings.append(
-            {
-                "type": "Feature",
-                "geometry": {
-                    "type": "Polygon",
-                    "coordinates": [[tuple(p) for p in r["ring"]]],
-                },
-                "properties": {"building": r["building"], "ref:bygningsnr": r["ref"]},
-                "center": (float(r["c_lon"]), float(r["c_lat"])),
-                "area": int(r["area"]),
-            }
-        )
-    ref.osm_buildings = osm_buildings
-    ref.import_buildings = import_buildings
-    ref.osm_elements = list(osm_buildings)
-    ref.osm_nodes = {}
-    ref.import_nodes = {}
-    ref.osm_id = -1000000
-    ref.debug = debug
-    ref.merge_buildings()
-    matched = {
-        (w["id"], w["tags"]["ref:bygningsnr"])
-        for w in osm_buildings
-        if w.get("action") == "modify"
-    }
-    if not debug:
-        return matched
-    tags = {}
-    for w in osm_buildings:
-        dbg = {
-            k: w["tags"][k]
-            for k in ("HAUSDORFF", "IDENTICAL", "SIZE")
-            if k in w["tags"]
-        }
-        if dbg:
-            tags[w["id"]] = dbg
-    return matched, tags
-
-
-def test_conflate_matches_reference(spark):
-    osm_pdf, import_pdf = FX.conflation_pdfs(64)
-    want = run_reference_merge(osm_pdf, import_pdf)
-    assert len(want) > 0  # fixture sanity: some pairs must match
-
-    osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
-    imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)
-    got_rows = conflate(osm, imports).collect()
-    got = {(r.osm_id, r.ref) for r in got_rows}
-    assert got == want
-
-    # expected category outcomes: kinds 0-2 match, 3-7 don't
-    matched_kinds = {int(ref) % 8 for _, ref in got}
-    assert matched_kinds == {0, 1, 2}
-
-    # identical flag only for the exact copies (kind 0)
-    for r in got_rows:
-        assert r.identical == (int(r.ref) % 8 == 0)
-
-
-def test_full_debug_spray_matches_reference(spark):
-    """The per-OSM-row -debug diagnostic surface (HAUSDORFF on any best
-    candidate, IDENTICAL on scanned sub-1m pairs, SIZE on area-gate
-    rejects) must byte-match the reference's tag dict after a debug=True
-    merge_buildings run on the same fixture (unique-best corpus — the
-    order-free formulation's documented equivalence class)."""
-    from building2osm_spark.operators.conflate import full_debug_spray
-
-    osm_pdf, import_pdf = FX.conflation_pdfs(64)
-    ref = __import__("tests.conftest", fromlist=["import_reference"]).import_reference(
-        "building_merge"
-    )
+    set up exactly as load_osm_buildings/load_import_buildings would) with
+    -debug on; returns (matched, tags) as run_reference_merge does."""
     osm_buildings = []
     for _, r in osm_pdf.iterrows():
         way = {
@@ -140,14 +89,53 @@ def test_full_debug_spray_matches_reference(spark):
     ref.osm_id = -1000000
     ref.debug = True
     ref.merge_buildings()
-    want = {}
+    matched = {
+        (w["id"], w["tags"]["ref:bygningsnr"])
+        for w in osm_buildings
+        if w.get("action") == "modify"
+    }
+    tags = {}
     for w in osm_buildings:
-        d = {
-            k: v for k, v in w["tags"].items()
-            if k in ("HAUSDORFF", "IDENTICAL", "SIZE")
+        dbg = {
+            k: w["tags"][k]
+            for k in ("HAUSDORFF", "IDENTICAL", "SIZE")
+            if k in w["tags"]
         }
-        if d:
-            want[w["id"]] = d
+        if dbg:
+            tags[w["id"]] = dbg
+    return matched, tags
+
+
+def test_conflate_matches_reference(spark):
+    osm_pdf, import_pdf = parity_corpus("std64")
+    want = run_reference_merge("std64")
+    assert len(want) > 0  # fixture sanity: some pairs must match
+
+    osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
+    imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)
+    got_rows = conflate(osm, imports).collect()
+    got = {(r.osm_id, r.ref) for r in got_rows}
+    assert got == want
+
+    # expected category outcomes: kinds 0-2 match, 3-7 don't
+    matched_kinds = {int(ref) % 8 for _, ref in got}
+    assert matched_kinds == {0, 1, 2}
+
+    # identical flag only for the exact copies (kind 0)
+    for r in got_rows:
+        assert r.identical == (int(r.ref) % 8 == 0)
+
+
+def test_full_debug_spray_matches_reference(spark):
+    """The per-OSM-row -debug diagnostic surface (HAUSDORFF on any best
+    candidate, IDENTICAL on scanned sub-1m pairs, SIZE on area-gate
+    rejects) must byte-match the reference's tag dict after a debug=True
+    merge_buildings run on the same fixture (unique-best corpus — the
+    order-free formulation's documented equivalence class)."""
+    from building2osm_spark.operators.conflate import full_debug_spray
+
+    osm_pdf, import_pdf = parity_corpus("std64")
+    _, want = run_reference_merge("std64", debug=True)
 
     osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
     imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)
@@ -158,6 +146,36 @@ def test_full_debug_spray_matches_reference(spark):
     assert got == want
     assert any("SIZE" in d for d in want.values())  # kind-5 rejects present
     assert any("IDENTICAL" in d for d in want.values())
+
+
+def test_conflate_plan_has_two_joins_in_every_regime(spark, final_plan):
+    """Rings ride the candidate stream whatever the broadcast threshold:
+    the executed plan holds exactly the earlier-import anti-join and the
+    candidate cell join (no ring re-joins), and the rows — area rejects
+    included — are the same under broadcast and shuffle joins."""
+    import re
+
+    # the standard corpus has ref-tagged OSM buildings, so the planner
+    # keeps the anti-join (an all-NULL ref_tag side folds it away)
+    osm_pdf, import_pdf = FX.conflation_pdfs(64)
+    osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
+    imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)
+    join = re.compile(
+        r"\b(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
+        r"|BroadcastNestedLoopJoin)\b"
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    rows = {}
+    try:
+        for thr in (str(64 * 1024 * 1024), "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+            df = conflate(osm, imports, with_area_rejects=True)
+            rows[thr] = sorted(map(tuple, df.collect()))
+            assert len(join.findall(final_plan(df))) == 2, thr
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    broadcast, shuffled = rows.values()
+    assert broadcast == shuffled and broadcast
 
 
 def test_identical_count_matches_reference_semantics(spark):

@@ -13,15 +13,15 @@ from building2osm_spark.operators.conflate import (
 )
 from building2osm_spark.sources import fixtures as FX
 from building2osm_spark.sources.fixtures import cascade_conflation_pdfs
-from tests.test_conflate import run_reference_merge
+from tests.test_conflate import parity_corpus, run_reference_merge
 
-# kept as the test-local name used below and by test_streaming_pip's guard test
+# the name test_streaming_pip's guard test imports
 _cascade_fixture = cascade_conflation_pdfs
 
 
 def test_greedy_matches_reference_on_cascade_corpus(spark):
-    osm_pdf, import_pdf = _cascade_fixture()
-    want = run_reference_merge(osm_pdf, import_pdf)
+    osm_pdf, import_pdf = parity_corpus("cascade")
+    want = run_reference_merge("cascade")
     assert want == {(1, "A"), (2, "B")}  # the reference's greedy cascade
 
     osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
@@ -46,8 +46,8 @@ def test_greedy_debug_spray_matches_reference_on_cascade_corpus(spark):
     tags O2 with HAUSDORFF against the REMAINING set {B} (4 m) — the
     order-free full_debug_spray answers 3 m (A, full set). The greedy
     spray must equal the reference byte-for-byte."""
-    osm_pdf, import_pdf = _cascade_fixture()
-    _, want = run_reference_merge(osm_pdf, import_pdf, debug=True)
+    osm_pdf, import_pdf = parity_corpus("cascade")
+    _, want = run_reference_merge("cascade", debug=True)
 
     osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
     imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)
@@ -60,19 +60,20 @@ def test_greedy_debug_spray_matches_reference_on_cascade_corpus(spark):
     assert full[2]["HAUSDORFF"] != want[2]["HAUSDORFF"]
 
 
-def test_greedy_debug_spray_matches_reference_on_standard_corpus(spark):
+def test_greedy_debug_spray_matches_reference_on_standard_corpus(spark, jobs_of):
     """On the unique-best fixture (incl. SIZE area-gate rejections and
     sub-1m IDENTICAL rows) the greedy spray, the order-free spray and the
     reference all agree."""
-    osm_pdf, import_pdf = FX.conflation_pdfs(64)
-    _, want = run_reference_merge(osm_pdf, import_pdf, debug=True)
+    osm_pdf, import_pdf = parity_corpus("std64")
+    _, want = run_reference_merge("std64", debug=True)
     assert any("SIZE" in t for t in want.values())  # fixture exercises SIZE
     assert any("IDENTICAL" in t for t in want.values())
 
     osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
     imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)
-    got = _spray_to_dict(greedy_debug_spray(osm, imports).collect())
-    assert got == want
+    rows, jobs = jobs_of(lambda: greedy_debug_spray(osm, imports).collect())
+    assert _spray_to_dict(rows) == want
+    assert jobs == 11  # pinned: a change here changes the plan's structure
 
 
 def test_greedy_parity_randomized_dense_corpora(spark):
@@ -82,10 +83,10 @@ def test_greedy_parity_randomized_dense_corpora(spark):
     surface must equal the imported reference byte-for-byte, seed by seed.
     At least one seed must also diverge from the order-free forms — proof
     the corpus family actually exercises the shrinking-set boundary."""
-    diverged = 0
+    diverged = False
     for seed in range(4):
-        osm_pdf, import_pdf = FX.dense_random_conflation_pdfs(seed=seed)
-        want_matched, want_tags = run_reference_merge(osm_pdf, import_pdf, debug=True)
+        osm_pdf, import_pdf = parity_corpus(f"dense{seed}")
+        want_matched, want_tags = run_reference_merge(f"dense{seed}", debug=True)
         assert want_matched  # corpus sanity: some matches every seed
 
         osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
@@ -95,20 +96,23 @@ def test_greedy_parity_randomized_dense_corpora(spark):
         got_t = _spray_to_dict(greedy_debug_spray(osm, imports).collect())
         assert got_t == want_tags, f"debug spray diverged at seed {seed}"
 
-        full_t = _spray_to_dict(full_debug_spray(osm, imports).collect())
-        diverged += full_t != want_tags
-    assert diverged >= 1
+        if not diverged:  # one diverging seed is the proof
+            full_t = _spray_to_dict(full_debug_spray(osm, imports).collect())
+            diverged = full_t != want_tags
+    assert diverged
 
 
-def test_greedy_equals_mutual_best_on_unique_best_corpus(spark):
+def test_greedy_equals_mutual_best_on_unique_best_corpus(spark, jobs_of):
     """On the standard fixture (unique best matches) greedy, mutual-best
     and the reference all agree — default behavior is unchanged."""
-    osm_pdf, import_pdf = FX.conflation_pdfs(64)
-    want = run_reference_merge(osm_pdf, import_pdf)
+    osm_pdf, import_pdf = parity_corpus("std64")
+    want = run_reference_merge("std64")
 
     osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
     imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)
-    greedy = {(r.osm_id, r.ref) for r in conflate_greedy(osm, imports).collect()}
+    rows, jobs = jobs_of(lambda: conflate_greedy(osm, imports).collect())
+    assert jobs == 11  # the same replay as greedy_debug_spray
+    greedy = {(r.osm_id, r.ref) for r in rows}
     mutual = {(r.osm_id, r.ref) for r in conflate(osm, imports).collect()}
     assert greedy == want
     assert mutual == want

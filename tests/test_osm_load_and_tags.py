@@ -8,8 +8,7 @@ from pyspark.sql import functions as F
 from building2osm_spark.operators.conflate import conflate, conflate_with_tags
 from building2osm_spark.operators.osm_load import osm_buildings_from_elements
 from building2osm_spark.sources import fixtures as FX
-from tests.conftest import import_reference
-from tests.test_conflate import run_reference_merge
+from tests.test_conflate import parity_corpus, run_reference_merge
 
 
 def _element_tables(spark, osm_pdf):
@@ -64,16 +63,8 @@ def test_conflate_from_elements_equals_direct(spark):
 
 
 def test_tag_merge_parity_with_reference(spark):
-    osm_pdf, import_pdf = FX.conflation_pdfs(64)
-    # run the reference merge and capture matched ways' final tags
-    ref_mod = import_reference("building_merge")
-    osm_dicts_tags = {}
-    matched = run_reference_merge(osm_pdf, import_pdf)
-    # run_reference_merge mutates its own copies; rebuild to capture tags:
-    # re-run and inspect (merge is deterministic on this fixture)
-    ref_tags = {}
-    # reconstruct by re-running with captured structures
-    import pandas as pd
+    osm_pdf, import_pdf = parity_corpus("std64")
+    matched = run_reference_merge("std64")
 
     osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
     imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)

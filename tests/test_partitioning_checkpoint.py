@@ -158,18 +158,26 @@ def test_salted_repartition_flag_plus_nested_payload(spark):
     assert n_salts >= 4
 
 
-def test_snapshot_commit_and_resume(spark, tmp_path):
+def test_snapshot_commit_and_resume(spark, tmp_path, jobs_of):
     store = SnapshotStore(str(tmp_path / "snap"))
     df1 = spark.range(100).select(F.col("id").alias("ref"), (F.col("id") * 2).alias("v"))
-    sid1, n1 = store.incremental_commit(df1, "stage_a", "ref", params={"p": 1})
+    (sid1, n1), jobs = jobs_of(
+        lambda: store.incremental_commit(df1, "stage_a", "ref", params={"p": 1})
+    )
     assert n1 == 100
+    # the write is the only job: n_new comes from the manifests' footer
+    # counts
+    assert jobs == 1
 
     # re-run with overlap: only new keys count as new
     df2 = spark.range(50, 150).select(
         F.col("id").alias("ref"), (F.col("id") * 2).alias("v")
     )
-    sid2, n2 = store.incremental_commit(df2, "stage_a", "ref", params={"p": 1})
+    (sid2, n2), jobs = jobs_of(
+        lambda: store.incremental_commit(df2, "stage_a", "ref", params={"p": 1})
+    )
     assert n2 == 50
+    assert jobs == 5
     final = store.read(spark, "stage_a")
     assert final.count() == 150
     assert final.select("ref").distinct().count() == 150
